@@ -20,26 +20,39 @@ import traceback
 from pyspark.sql import functions as F
 
 
-def _cpu_total_ns(spark):
-    """Total executor CPU nanoseconds across all retained stages (app
-    status store). Per-query deltas of this sum make a contended record
-    self-diagnosing: host contention inflates WALL uniformly while CPU
-    stays flat, whereas a real plan regression inflates both. Returns
-    None when the internal API is unavailable (bench still runs)."""
+def retained_stages(spark) -> list | None:
+    """Every stage the app status store retains, as JVM ``StageData``
+    objects, after draining the listener bus so just-finished stages are
+    in. This is the one walk over the status store: bench.py's per-query
+    CPU, scale_probe.py's cost legs and profile_queries.py's per-stage
+    table all read it. None when the internal API is unavailable (the
+    callers still run)."""
     try:
         sc = spark.sparkContext
         sc._jsc.sc().listenerBus().waitUntilEmpty()
         store = sc._jsc.sc().statusStore()
-        empty = sc._jvm.java.util.ArrayList()
         defaults = [
             getattr(store, f"stageList$default${i}")() for i in range(2, 6)
         ]
-        stages = store.stageList(empty, *defaults)
-        return sum(
-            stages.apply(i).executorCpuTime() for i in range(stages.size())
-        )
+        stages = store.stageList(sc._jvm.java.util.ArrayList(), *defaults)
+        return [stages.apply(i) for i in range(stages.size())]
     except Exception:
         return None
+
+
+def stage_totals(spark) -> tuple[int, int] | None:
+    """(executor CPU ns, shuffle write bytes) summed over the retained
+    stages. Per-query deltas of these sums isolate one query's cost and
+    make a contended record self-diagnosing: host contention inflates
+    WALL uniformly while CPU stays flat, whereas a real plan regression
+    inflates both."""
+    stages = retained_stages(spark)
+    if stages is None:
+        return None
+    return (
+        sum(s.executorCpuTime() for s in stages),
+        sum(s.shuffleWriteBytes() for s in stages),
+    )
 
 
 def _loadavg() -> list[float] | None:
@@ -92,8 +105,7 @@ def _calibrate() -> tuple[float, float, float | None]:
     intact (round-7 adjudication: 32 vCPUs delivering 15.4 effective
     cores while serial calib ran full speed — exactly the uniform 1.5x
     wall inflation the r6/r7 solo records showed on identical plans).
-    effective_cores = n_procs * serial/parallel; cross-round comparisons
-    should normalize by it before reading anything as a plan regression."""
+    effective_cores = n_procs * serial/parallel."""
     import multiprocessing as mp
 
     t0 = time.perf_counter()
@@ -141,60 +153,6 @@ def _dag_cost_hint() -> dict[str, float]:
                 hint[name] = max(hint.get(name, 0.0), float(sec))
     return hint
 
-
-def _best_known(
-    sf: float,
-) -> tuple[dict[str, tuple[float, float | None]], dict[str, tuple[float, float]]]:
-    """Per-query best wall seconds across every recorded bench round at
-    this SF (BENCH_r*.json next to this file), as TWO maps:
-
-    - absolute best ``(wall, effective_cores-or-None)`` — the rerun /
-      adjudication baseline (the burst-vs-quiet A/B, PLANS.md round 5,
-      showed identical plans differing up to 10x under host bursts, so a
-      run >2x its best is re-measured once before the number is accepted);
-    - best-WITH-capacity ``(wall, effective_cores)`` over only the records
-      that stored ``effective_cores`` (round >= 7) — the normalization
-      baseline (VERDICT r8 #4): wall x eff approximates delivered
-      core-seconds, which is host-invariant for a fixed plan, so
-      ``inflation_vs_best_norm`` computed against THIS map always fills
-      instead of waiting for pre-capacity bests to age out.
-    """
-    import glob
-
-    best: dict[str, tuple[float, float | None]] = {}
-    best_cap: dict[str, tuple[float, float]] = {}
-    here = os.path.dirname(os.path.abspath(__file__))
-    for path in glob.glob(os.path.join(here, "BENCH_r*.json")):
-        try:
-            with open(path) as fh:
-                rec = json.load(fh)
-        except Exception:
-            continue
-        if isinstance(rec.get("parsed"), dict):
-            # driver wrapper ({n, rc, tail, parsed}) — the record proper
-            # is under "parsed" once the compact-stdout fix landed
-            rec = rec["parsed"]
-        if rec.get("sf") != sf:
-            continue
-        # prefer the burst-resistant start/end mean where a record has it
-        eff = rec.get("effective_cores_mean", rec.get("effective_cores"))
-        eff = float(eff) if isinstance(eff, (int, float)) else None
-        for name, sec in (rec.get("queries") or {}).items():
-            if not isinstance(sec, (int, float)):
-                continue
-            if name not in best or sec < best[name][0]:
-                best[name] = (float(sec), eff)
-            if eff is not None and (
-                name not in best_cap or sec < best_cap[name][0]
-            ):
-                best_cap[name] = (float(sec), eff)
-    return best, best_cap
-
-
-#: a query slower than RERUN_FACTOR x its recorded best is re-run once and
-#: the faster of the two measurements is kept (with both recorded) — the
-#: mechanical form of the round-5 burst-vs-quiet adjudication.
-RERUN_FACTOR = 2.0
 
 #: corpus tables worth re-laying-out before timing (see _presplit_corpus)
 SPLIT_TABLES = ("lineitem", "orders", "events", "documents", "embeddings", "customer", "part")
@@ -310,14 +268,7 @@ def main() -> None:
     import_all_models()
     spark = get_spark("dbt-tpch-spark-bench")
 
-    try:
-        from dbt_tpch_spark.operators import entries as op_entries
-
-        extra = op_entries.bench_queries()
-    except ImportError:
-        extra = {}
-
-    names = [n for n in HEADLINE if n in MODELS] + list(extra)
+    names = [n for n in HEADLINE if n in MODELS]
 
     import tempfile
 
@@ -335,119 +286,41 @@ def main() -> None:
         # warm the JVM + parquet footers once with the cheapest model
         Context(spark, data_dir).ref("ods_orders").count()
 
-        best, best_cap = _best_known(sf)
         load_before = _loadavg()
         ticks_before = _cpu_ticks()
         calib_sec, calib32_sec, effective_cores = _calibrate()
 
-        def run_once(name: str) -> float | None:
-            start = time.perf_counter()
-            try:
-                if name in extra:
-                    df = extra[name](spark, data_dir)
-                else:
-                    df = Context(spark, data_dir).ref(name)
-                # force full materialization of every column (count() alone
-                # would let Catalyst prune the plan down to nothing)
-                df.agg(F.max(F.xxhash64(*df.columns))).collect()
-            except Exception:
-                errors[name] = traceback.format_exc()[-500:]
-                return None
-            return time.perf_counter() - start
-
         timings: dict[str, float] = {}
         cpu_secs: dict[str, float] = {}
-        inflation: dict[str, float] = {}
-        inflation_norm: dict[str, float] = {}
-        reruns: dict[str, list[float]] = {}
-        rerun_errors: dict[str, str] = {}
-        needs_adjudication: dict[str, dict] = {}
         total = 0.0
-        cpu_before = _cpu_total_ns(spark)
+        cpu_before = stage_totals(spark)
         # per-query steal attribution (round 10): the host's bursts are
         # shorter than a run, so a single run-level steal_pct hides WHICH
         # walls were taxed — a per-query /proc/stat delta names them
         query_steal: dict[str, float] = {}
         for name in names:
             q_ticks = _cpu_ticks()
-            elapsed = run_once(name)
+            start = time.perf_counter()
+            try:
+                df = Context(spark, data_dir).ref(name)
+                # force full materialization of every column (count() alone
+                # would let Catalyst prune the plan down to nothing)
+                df.agg(F.max(F.xxhash64(*df.columns))).collect()
+                elapsed = time.perf_counter() - start
+            except Exception:
+                # one broken query must not zero the whole bench record
+                errors[name] = traceback.format_exc()[-500:]
+                elapsed = None
             if q_ticks is not None:
                 qs = _steal_pct(q_ticks, _cpu_ticks())
                 if qs is not None:
                     query_steal[name] = qs
-            if elapsed is None:
-                # one broken query must not zero the whole bench record
-                cpu_before = _cpu_total_ns(spark)
-                continue
-            cpu_after = _cpu_total_ns(spark)
-            cpu1 = (
-                (cpu_after - cpu_before) / 1e9
-                if cpu_before is not None and cpu_after is not None
-                else None
-            )
-            cpu_sec = cpu1
-            # contention adjudication: a measurement >RERUN_FACTOR x the
-            # recorded best at this SF is re-taken once; keep the faster
-            # (a host burst inflates one sample, not both) and record both
-            if name in best and elapsed > RERUN_FACTOR * best[name][0]:
-                cpu_mid = cpu_after
-                # re-snapshot ticks around the rerun: queries_steal_pct must
-                # describe the ACCEPTED sample — if the rerun's wall replaces
-                # the first one, the first sample's steal would mislabel
-                # exactly the queries where attribution matters (r11 ADVICE)
-                rerun_ticks = _cpu_ticks()
-                second = run_once(name)
-                rerun_steal = (
-                    _steal_pct(rerun_ticks, _cpu_ticks())
-                    if rerun_ticks is not None
-                    else None
-                )
-                cpu_after = _cpu_total_ns(spark)
-                if second is None:
-                    # the FIRST sample succeeded — a failed re-measure is a
-                    # rerun problem, not a broken query: keep the first
-                    # timing + cpu and log the traceback separately so the
-                    # record never shows one query both timed and broken
-                    rerun_errors[name] = errors.pop(name, "")
-                    cpu_after = cpu_mid
-                else:
-                    reruns[name] = [round(elapsed, 3), round(second, 3)]
-                    cpu2 = (
-                        (cpu_after - cpu_mid) / 1e9
-                        if cpu_mid is not None and cpu_after is not None
-                        else None
-                    )
-                    if second < elapsed:
-                        elapsed, cpu_sec = second, cpu2
-                        if rerun_steal is not None:
-                            query_steal[name] = rerun_steal
-                    if elapsed > RERUN_FACTOR * best[name][0]:
-                        # PERSISTENT >2x: the auto-rerun did not absorb it,
-                        # so don't silently accept the number — record the
-                        # adjudication evidence (flat cpu vs best-round cpu
-                        # = host contention; inflated cpu too = plan or
-                        # feedstock regression) for a PLANS.md entry
-                        needs_adjudication[name] = {
-                            "samples_wall_sec": reruns[name],
-                            "samples_cpu_sec": [
-                                round(c, 3) if c is not None else None
-                                for c in (cpu1, cpu2)
-                            ],
-                            "best_wall_sec": round(best[name][0], 3),
-                            "inflation_vs_best": round(
-                                elapsed / best[name][0], 2
-                            ),
-                            "loadavg_now": _loadavg(),
-                            "steal_pct_so_far": _steal_pct(
-                                ticks_before, _cpu_ticks()
-                            ),
-                        }
-            timings[name] = round(elapsed, 3)
-            total += elapsed
-            if name in best and best[name][0] > 0:
-                inflation[name] = round(elapsed / best[name][0], 2)
-            if cpu_sec is not None:
-                cpu_secs[name] = round(cpu_sec, 3)
+            cpu_after = stage_totals(spark)
+            if elapsed is not None:
+                timings[name] = round(elapsed, 3)
+                total += elapsed
+                if cpu_before is not None and cpu_after is not None:
+                    cpu_secs[name] = round((cpu_after[0] - cpu_before[0]) / 1e9, 3)
             cpu_before = cpu_after
 
         # full-DAG warehouse build: the engine analogue of the reference's
@@ -474,35 +347,6 @@ def main() -> None:
                 n_tables = len(paths)
         except Exception:
             errors["_full_dag_build"] = traceback.format_exc()[-500:]
-
-        # second calibration at run END (round 10): effective_cores sampled
-        # once at start is burst-sensitive — three same-code r10 runs spanned
-        # norm medians 0.82-1.34 purely from calibration-window luck. The
-        # start/end pair bounds the host's capacity drift over the run; the
-        # mean is the norm-computation input future rounds should prefer.
-        calib_end_sec, calib32_end_sec, effective_cores_end = _calibrate()
-        effective_cores_mean = (
-            round((effective_cores + effective_cores_end) / 2, 1)
-            if effective_cores is not None and effective_cores_end is not None
-            else effective_cores or effective_cores_end
-        )
-        # capacity-normalized inflation (VERDICT r7 #6 / r8 #4): wall x
-        # effective_cores ~ delivered core-seconds, so for a fixed plan
-        # the ratio is host-invariant. >1 here means the plan (or
-        # feedstock) genuinely regressed; raw inflation with norm ~1
-        # means the host degraded. Computed against the best RECORD THAT
-        # CARRIED capacity (best_cap) so the normalized cell fills for
-        # every query seen since round 7. Round 10: computed POST-RUN
-        # with the start/end MEAN capacity — a single start-sample made
-        # three same-code runs span norm medians 0.82-1.34 purely from
-        # which side of a host burst the calibration landed on.
-        if effective_cores_mean:
-            for qname, wall in timings.items():
-                if qname in best_cap and best_cap[qname][0] > 0:
-                    cap_sec, cap_eff = best_cap[qname]
-                    inflation_norm[qname] = round(
-                        (wall * effective_cores_mean) / (cap_sec * cap_eff), 2
-                    )
 
     # a failed query's time is omitted from `value`, so a partial total must
     # never be read as a speedup: n_failed flags it and `value` goes null
@@ -543,13 +387,7 @@ def main() -> None:
         # to hintless rounds on the DAG phase
         "dag_lpt_scheduled": bool(dag_hint),
         "setup_split_sec": round(split_sec, 3),
-        # contention self-adjudication (VERDICT r5 #5): host load before/
-        # after, per-query wall vs the best recorded wall at this SF, and
-        # the both-samples record for any query the >2x rule re-measured
-        # (cpu_sec reports the KEPT sample). A query still >2x after its
-        # re-measure lands in needs_adjudication with wall+cpu for both
-        # samples (VERDICT r6 #5) — the record self-explains instead of
-        # silently accepting the number.
+        # host load before/after: a contended record is visibly contended
         "loadavg_before": load_before,
         "loadavg_after": _loadavg(),
         # hypervisor steal over the whole run: the guest-invisible
@@ -558,42 +396,14 @@ def main() -> None:
         "steal_pct": _steal_pct(ticks_before, _cpu_ticks()),
         # guest-CPU speedometer (fixed workload, serial + 32-way): the
         # host's effective parallel capacity varies (observed 15-32
-        # effective cores on a 32-vCPU guest); normalize cross-round
-        # timings by effective_cores before reading plan regressions
+        # effective cores on a 32-vCPU guest), which is why walls are only
+        # compared inside one same-window A/B (ab.sh), never across runs
         "calib_sec": calib_sec,
         "calib32_sec": calib32_sec,
         "effective_cores": effective_cores,
-        # start/end calibration pair (round 10): bounds capacity drift over
-        # the run; prefer effective_cores_mean for cross-round norms
-        "calib_end_sec": calib_end_sec,
-        "calib32_end_sec": calib32_end_sec,
-        "effective_cores_end": effective_cores_end,
-        "effective_cores_mean": effective_cores_mean,
         # per-query hypervisor-steal deltas: names the taxed walls
         "queries_steal_pct": query_steal,
-        "inflation_vs_best": inflation,
-        # wall x eff_now / (best_cap_wall x eff_best): host-capacity-
-        # invariant inflation vs the best record that stored
-        # effective_cores (VERDICT r8 #4) — the judge-facing regression
-        # read; fills for every query benched since round 7
-        "inflation_vs_best_norm": inflation_norm,
-        # provenance for both reads: the absolute best (rerun baseline)
-        # and the best-with-capacity (normalization baseline)
-        "best_wall_sec": {
-            n: round(best[n][0], 3) for n in timings if n in best
-        },
-        "best_cap_wall_sec": {
-            n: round(best_cap[n][0], 3) for n in timings if n in best_cap
-        },
-        "best_cap_effective_cores": {
-            n: best_cap[n][1] for n in timings if n in best_cap
-        },
-        "reruns": reruns,
     }
-    if needs_adjudication:
-        record["needs_adjudication"] = needs_adjudication
-    if rerun_errors:
-        record["rerun_errors"] = rerun_errors
     if errors:
         record["errors"] = errors
 

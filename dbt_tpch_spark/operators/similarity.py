@@ -439,38 +439,6 @@ FROM ranked WHERE rank <= {TOP_K}""",
 
 
 # --------------------------------------------------------------------------
-# Arrow-vectorized alternative for the dot product (pandas_udf path)
-# --------------------------------------------------------------------------
-
-
-def cosine_pandas_udf():
-    """Vectorized cosine over two array<float> columns via Arrow batches —
-    the alternative to the JVM zip_with/aggregate expression when the
-    per-element math outgrows SQL (e.g. fp16 quantization, learned
-    projections). ~10-100x faster than row-at-a-time Python UDFs; still
-    slower than staying JVM-side, which is why the query operators default
-    to DOT_SPARK."""
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql.functions import pandas_udf
-
-    def cosine(a, b):
-        am = np.stack(a.to_numpy())
-        bm = np.stack(b.to_numpy())
-        dots = np.einsum("ij,ij->i", am, bm, dtype=np.float64)
-        na = np.sqrt(np.einsum("ij,ij->i", am, am, dtype=np.float64))
-        nb = np.sqrt(np.einsum("ij,ij->i", bm, bm, dtype=np.float64))
-        return pd.Series(dots / (na * nb))
-
-    # real class objects, not strings: `from __future__ import annotations`
-    # stringifies inline hints and pyspark's signature inspection can't
-    # resolve them for a nested function
-    cosine.__annotations__ = {"a": pd.Series, "b": pd.Series, "return": pd.Series}
-    return pandas_udf(cosine, "double")
-
-
-# --------------------------------------------------------------------------
 # int8 scalar quantization (embedding compression for storage / ANN)
 # --------------------------------------------------------------------------
 

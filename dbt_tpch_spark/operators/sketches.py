@@ -438,16 +438,6 @@ def customers_bloom_prune(ctx):
     )
 
 
-def _bloom_probe_sql() -> str:
-    pos_exprs = ",\n           ".join(
-        _bloom_pos_sql(
-            f"md5(concat('bloom', '{i}', '|', CAST(customer_key AS VARCHAR)))"
-        )
-        for i in range(BLOOM_K)
-    )
-    return pos_exprs
-
-
 oracle(
     "customers_bloom_prune",
     ("dim_customer",),

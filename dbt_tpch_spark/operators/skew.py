@@ -1,83 +1,17 @@
-"""Skew-mitigation utilities for hot keys at scale.
+"""Join-key skew diagnostics for hot keys at scale.
 
-AQE's skew-join splitting (enabled in session.py) handles most cases at
-runtime; these helpers are for the patterns AQE can't fix:
-
-* ``salted_aggregate`` — two-phase aggregation for a groupBy whose key
-  distribution is pathological (one key >> everything): partial-aggregate on
-  (key, salt), then final-aggregate on key. Works for any algebraic
-  aggregate expressed as (partial, merge) pairs.
-* ``salted_broadcast_left`` — replicate-and-salt pattern for joining a
-  skewed fact against a *small* dimension when broadcast alone is not
-  possible (e.g. the dim is just over the threshold): explode the dim with
-  R salt values, salt the fact randomly in [0, R), join on (key, salt).
-
-Both are pure DataFrame compositions — Catalyst sees ordinary plans.
+AQE's skew-join splitting (enabled in session.py) handles skewed joins at
+runtime (tests/test_skew.py proves it engages on a pathological key);
+``lineitem_skew_report`` measures how skewed each lineitem join key is.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-SALT_COL = "__salt"
-
-
-def with_salt(df: DataFrame, n_salts: int, deterministic_by: str | None = None) -> DataFrame:
-    """Append a salt in [0, n_salts). Deterministic variant hashes an
-    existing unique column (keeps tests reproducible); random variant uses
-    rand() (fine for aggregation, where placement doesn't matter)."""
-    if deterministic_by is not None:
-        salt = F.pmod(F.xxhash64(F.col(deterministic_by)), F.lit(n_salts))
-    else:
-        salt = (F.rand() * n_salts).cast("int")
-    return df.withColumn(SALT_COL, salt)
-
-
-def salted_aggregate(
-    df: DataFrame,
-    keys: list[str],
-    partial_aggs: list[Column],
-    final_aggs: list[Column],
-    n_salts: int = 16,
-    deterministic_by: str | None = None,
-) -> DataFrame:
-    """Two-phase skew-safe groupBy: groupBy(keys + salt) with partial_aggs,
-    then groupBy(keys) with final_aggs over the partial columns.
-
-    The partial stage spreads a hot key over n_salts reducers; the final
-    stage touches only (n_keys x n_salts) rows.
-    """
-    partial = with_salt(df, n_salts, deterministic_by).groupBy(
-        *keys, SALT_COL
-    ).agg(*partial_aggs)
-    return partial.groupBy(*keys).agg(*final_aggs)
-
-
-def salted_broadcast_left(
-    fact: DataFrame,
-    dim: DataFrame,
-    key: str,
-    n_salts: int = 8,
-    deterministic_by: str | None = None,
-) -> DataFrame:
-    """Join a skewed fact to a small dim by replicating the dim n_salts
-    times and salting the fact: the hot key's rows spread over n_salts
-    partitions instead of one."""
-    salts = F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
-    dim_rep = dim.withColumn(SALT_COL, salts)
-    fact_salted = with_salt(fact, n_salts, deterministic_by)
-    joined = fact_salted.join(dim_rep, [key, SALT_COL])
-    return joined.drop(SALT_COL)
-
-
-# --------------------------------------------------------------------------
-# skew diagnostics as a query
-# --------------------------------------------------------------------------
-
-from dbt_tpch_spark.functions import rnd  # noqa: E402
-from dbt_tpch_spark.models.oracle import oracle, rnd_sql  # noqa: E402
-from dbt_tpch_spark.plans import model  # noqa: E402
+from dbt_tpch_spark.functions import rnd
+from dbt_tpch_spark.models.oracle import oracle, rnd_sql
+from dbt_tpch_spark.plans import model
 
 SKEW_KEYS = ("l_orderkey", "l_partkey", "l_suppkey")
 
@@ -86,9 +20,8 @@ SKEW_KEYS = ("l_orderkey", "l_partkey", "l_suppkey")
 def lineitem_skew_report(ctx):
     """Join-key skew diagnostics for every lineitem join key: distinct
     count, heaviest-key weight, mean weight, and the max/mean skew factor
-    — the number that decides whether a join needs salting
-    (salted_aggregate / salted_broadcast_left below) or can rely on AQE's
-    skew splitting. One aggregation per key, unioned; each is map-side
+    — the number that decides whether a join needs salting or can rely
+    on AQE's skew splitting. One aggregation per key, unioned; each is map-side
     combined before its shuffle."""
     li = ctx.source("lineitem")
     out = None

@@ -78,14 +78,6 @@ def read_csv(spark: SparkSession, path: str, schema: str) -> DataFrame:
     return spark.read.schema(schema).option("header", "true").csv(path)
 
 
-def write_json(df: DataFrame, path: str) -> None:
-    df.write.mode("overwrite").json(path)
-
-
-def read_json(spark: SparkSession, path: str, schema: str) -> DataFrame:
-    return spark.read.schema(schema).json(path)
-
-
 def write_orc(df: DataFrame, path: str) -> None:
     """ORC sink (columnar alternative to parquet, built into Spark) —
     same overwrite contract as the parquet layer."""
@@ -94,16 +86,3 @@ def write_orc(df: DataFrame, path: str) -> None:
 
 def read_orc(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.orc(path)
-
-
-def write_avro(df: DataFrame, path: str) -> None:
-    """Avro sink (row-oriented interchange). The spark-avro package is not
-    bundled in every deployment; raise a clear error instead of a cryptic
-    ClassNotFoundException."""
-    try:
-        df.write.mode("overwrite").format("avro").save(path)
-    except Exception as exc:  # pragma: no cover - environment-dependent
-        raise RuntimeError(
-            "avro sink requires the spark-avro package "
-            "(--packages org.apache.spark:spark-avro_2.13:<spark-version>)"
-        ) from exc

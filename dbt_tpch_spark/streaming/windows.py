@@ -796,19 +796,6 @@ def streaming_dedup_by_event_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     return e.dropDuplicatesWithinWatermark(["event_id"])
 
 
-def run_to_memory(df: DataFrame, name: str) -> None:
-    """Drain a streaming DataFrame into an in-memory table via availableNow
-    (test harness helper)."""
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete" if df.isStreaming else "append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
 def stream_events_to_parquet(
     spark: SparkSession, sf_dir: str, out_path: str, checkpoint: str
 ) -> None:

@@ -55,7 +55,7 @@ import time
 
 from pyspark.sql import functions as F
 
-from bench import _cpu_ticks, _loadavg, _steal_pct, _calibrate
+from bench import _calibrate, _cpu_ticks, _loadavg, _steal_pct, stage_totals
 
 #: queries the probe measures: the round-9 top-5 by solo wall, plus the
 #: pair-stage family the verdict names, plus the full-LSH head.
@@ -359,23 +359,6 @@ def measure_recall(spark, corpus_dir: str, planted: dict) -> dict:
     return out
 
 
-def _stage_totals(spark) -> tuple[int, int]:
-    """(executor CPU ns, shuffle write bytes) summed over retained stages;
-    per-query deltas isolate one query's cost."""
-    sc = spark.sparkContext
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    store = sc._jsc.sc().statusStore()
-    empty = sc._jvm.java.util.ArrayList()
-    defaults = [getattr(store, f"stageList$default${i}")() for i in range(2, 6)]
-    stages = store.stageList(empty, *defaults)
-    cpu = shuf = 0
-    for i in range(stages.size()):
-        s = stages.apply(i)
-        cpu += s.executorCpuTime()
-        shuf += s.shuffleWriteBytes()
-    return cpu, shuf
-
-
 def _run_query(spark, sf_dir: str, name: str) -> dict:
     """Execute the full plan (noop sink: no driver collect, no output
     skew) and return wall / CPU / shuffle-write deltas plus row count."""
@@ -383,12 +366,12 @@ def _run_query(spark, sf_dir: str, name: str) -> dict:
 
     import_all_models()
     ctx = Context(spark, sf_dir)
-    cpu0, shuf0 = _stage_totals(spark)
+    cpu0, shuf0 = stage_totals(spark)
     t0 = time.perf_counter()
     df = ctx.ref(name)
     df.write.format("noop").mode("overwrite").save()
     wall = time.perf_counter() - t0
-    cpu1, shuf1 = _stage_totals(spark)
+    cpu1, shuf1 = stage_totals(spark)
     return {
         "wall_sec": round(wall, 3),
         "cpu_sec": round((cpu1 - cpu0) / 1e9, 3),

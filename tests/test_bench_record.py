@@ -2,6 +2,8 @@
 tail capture (VERDICT r8 #7 fixed the overflow; VERDICT r9 #8 + round-9
 ADVICE demand the budget be ASSERTED, not assumed — the record grows with
 every headline query and error lists are unbounded on failing rounds).
+The compact key set is pinned exactly, and the profiling tools must
+share bench's one status-store walk.
 
 Pure-Python: no SparkSession, no testdata.
 """
@@ -11,6 +13,26 @@ from __future__ import annotations
 import json
 
 import bench
+
+
+#: the compact stdout record of a healthy round, exactly: its parser
+#: reads these keys, and full-record-only fields must not leak in
+COMPACT_KEYS = {
+    "metric",
+    "value",
+    "unit",
+    "queries",
+    "sf",
+    "n_queries",
+    "n_failed",
+    "solo",
+    "stable20_subtotal_sec",
+    "full_dag_build_sec",
+    "full_dag_tables",
+    "effective_cores",
+    "steal_pct",
+    "full_record",
+}
 
 
 def _record(n_queries: int, n_error_queries: int, n_setup_errors: int) -> dict:
@@ -85,20 +107,51 @@ def test_pathological_round_always_fits():
 def test_compact_keys_are_stable():
     """The driver-side parser reads these keys; renames are breaking."""
     c = bench.compact_record(_record(5, 0, 0), None)
-    for key in (
-        "metric",
-        "value",
-        "unit",
-        "queries",
-        "sf",
-        "n_queries",
-        "n_failed",
-        "solo",
-        "stable20_subtotal_sec",
-        "full_dag_build_sec",
-        "full_dag_tables",
-        "effective_cores",
-        "steal_pct",
-        "full_record",
-    ):
+    for key in COMPACT_KEYS:
         assert key in c, key
+
+
+def test_healthy_compact_record_has_exact_key_set():
+    """A healthy full record, with its full-record-only fields, projects
+    to exactly COMPACT_KEYS."""
+    rec = _record(len(bench.HEADLINE), 0, 0)
+    rec.update(
+        {
+            "queries": {n: 12.345 for n in bench.HEADLINE},
+            "queries_cpu_sec": {n: 1.0 for n in bench.HEADLINE},
+            "queries_steal_pct": {n: 0.5 for n in bench.HEADLINE},
+            "dag_tables": {"fct_orders": 1.0},
+            "dag_levels": [1.0],
+            "dag_lpt_scheduled": True,
+            "setup_split_sec": 2.0,
+            "loadavg_before": [0.1, 0.1, 0.1],
+            "loadavg_after": [0.2, 0.2, 0.2],
+            "calib_sec": 1.0,
+            "calib32_sec": 1.5,
+        }
+    )
+    c = bench.compact_record(rec, "/x/BENCH_LAST_FULL.json")
+    assert set(c) == COMPACT_KEYS
+
+
+def test_tools_share_the_one_status_store_walk():
+    """profile_queries.py and scale_probe.py import the stage walk from
+    bench; a rename there must fail here. And the walk exists once: no
+    other module outside perfbench/ calls the status store's stageList."""
+    import pathlib
+
+    import profile_queries
+    import scale_probe
+
+    assert profile_queries.retained_stages is bench.retained_stages
+    assert profile_queries.stage_totals is bench.stage_totals
+    assert scale_probe.stage_totals is bench.stage_totals
+
+    root = pathlib.Path(bench.__file__).resolve().parent
+    callers = [
+        p.relative_to(root).as_posix()
+        for p in [*root.glob("*.py"), *root.glob("dbt_tpch_spark/**/*.py")]
+        if ".stageList(" in p.read_text()
+    ]
+    assert callers == ["bench.py"]
+    assert bench.retained_stages.__code__.co_names.count("stageList") == 1

@@ -87,31 +87,6 @@ def test_sketch_aggregates_accuracy(spark, sf_dir):
     assert abs(row.approx_p50 - row.exact_p50) <= 0.05 * abs(row.exact_p50)
 
 
-def test_pandas_udf_cosine_agrees_with_jvm_expression(spark, sf_dir):
-    """The Arrow-vectorized cosine must agree with the exact-decimal JVM
-    expression to float tolerance (different summation schemes: einsum
-    pairwise vs exact decimal — not bit-identical by design)."""
-    from dbt_tpch_spark.operators.dedup import DOT_SPARK
-    from dbt_tpch_spark.operators.similarity import cosine_pandas_udf
-    from dbt_tpch_spark.sources import read_table
-
-    e = read_table(spark, sf_dir, "embeddings").limit(50)
-    a = e.selectExpr("vec_id AS va", "embedding AS ea")
-    b = e.selectExpr("vec_id AS vb", "embedding AS eb")
-    pairs = a.join(b, F.col("va") < F.col("vb"))
-    jvm = F.expr(DOT_SPARK.format(a="ea", b="eb")) / (
-        F.sqrt(F.expr(DOT_SPARK.format(a="ea", b="ea")))
-        * F.sqrt(F.expr(DOT_SPARK.format(a="eb", b="eb")))
-    )
-    cos_udf = cosine_pandas_udf()
-    out = pairs.select(
-        jvm.alias("jvm"), cos_udf(F.col("ea"), F.col("eb")).alias("arrow")
-    )
-    bad = out.filter(F.abs(F.col("jvm") - F.col("arrow")) > 1e-9)
-    assert bad.count() == 0
-    assert out.count() == 50 * 49 // 2
-
-
 def test_asof_join_invariants_and_plan(spark, sf_dir):
     """As-of semantics: click at-or-before the anchor (gap_us >= 0), and the
     physical plan must contain no join at all — the union+window form's
