@@ -10,12 +10,63 @@
 #   HEAD_DIR defaults to this script's tree. Two legs per side.
 #   SPARK_GRAFT_SF_DIR and SPARK_GRAFT_CPUS pass through to bench.py.
 #   Make the baseline with `git clone` or `git archive` of the base commit.
+#
+# Workload mode: BASE_DIR=... OUT_DIR=... ./ab.sh <workload> [pairs]
+#   Runs `perfbench/run.py --workload <workload> --seconds 10 --trace 0`
+#   for <pairs> pairs (default 10), alternating which tree runs first in
+#   each pair, archives {base,head}_<pair>.{stdout,stderr} and prints each
+#   side's median and quartiles and the head's wins per pair (lower wins,
+#   ties count for neither) for setup_s, cpu_s and exec_cpu_s, plus the
+#   steal_pct range and every run's correct/failed.
 set -u
 HERE=$(cd "$(dirname "$0")" && pwd)
 BASE_DIR=${BASE_DIR:?set BASE_DIR to a checkout of the baseline commit}
 HEAD_DIR=${HEAD_DIR:-$HERE}
 OUT_DIR=${OUT_DIR:?set OUT_DIR to the directory that archives the records}
 mkdir -p "$OUT_DIR" && OUT_DIR=$(cd "$OUT_DIR" && pwd)
+if [ $# -ge 1 ]; then
+  WORKLOAD=$1 PAIRS=${2:-10}
+  runw() { # runw <dir> <tag>
+    ( cd "$1" && python3 perfbench/run.py --workload "$WORKLOAD" --seconds 10 --trace 0 \
+        > "$OUT_DIR/$2.stdout" 2> "$OUT_DIR/$2.stderr" )
+    echo "done $2"
+  }
+  for i in $(seq 1 "$PAIRS"); do
+    if [ $((i % 2)) -eq 1 ]; then
+      runw "$BASE_DIR" "base_$i"; runw "$HEAD_DIR" "head_$i"
+    else
+      runw "$HEAD_DIR" "head_$i"; runw "$BASE_DIR" "base_$i"
+    fi
+  done
+  python3 - "$OUT_DIR" "$PAIRS" <<'EOF'
+import json, os, statistics, sys
+
+out, pairs = sys.argv[1], int(sys.argv[2])
+
+
+def lines(tag):
+    """(full record, result) of one run: its last two stdout lines."""
+    with open(os.path.join(out, f"{tag}.stdout")) as fh:
+        rec, res = fh.read().splitlines()[-2:]
+    return json.loads(rec), json.loads(res)
+
+
+runs = {side: [lines(f"{side}_{i}") for i in range(1, pairs + 1)] for side in ("base", "head")}
+steal = [rec["host"]["steal_pct"] for side in runs.values() for rec, _ in side]
+print(f"steal_pct {min(steal):.1f}-{max(steal):.1f}")
+for side, rs in runs.items():
+    print(side, "correct/failed", [(res["correct"], res["failed"]) for _, res in rs])
+for m in ("setup_s", "cpu_s", "exec_cpu_s"):
+    vals = {side: [res["metrics"][m]["value"] for _, res in rs] for side, rs in runs.items()}
+    wins = sum(h < b for b, h in zip(vals["base"], vals["head"]))
+    stats = []
+    for side in ("base", "head"):
+        q1, med, q3 = statistics.quantiles(vals[side], n=4, method="inclusive")
+        stats.append(f"{side} {med:.2f} (q1 {q1:.2f}, q3 {q3:.2f})")
+    print(f"{m}: {'; '.join(stats)}; head wins {wins}/{pairs}")
+EOF
+  exit
+fi
 run() { # run <dir> <tag>
   local dir=$1 tag=$2
   ( cd "$dir" && SPARK_GRAFT_SOLO=1 \

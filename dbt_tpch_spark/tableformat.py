@@ -14,11 +14,15 @@ do, scaled to what a from-scratch repo can carry honestly:
   On a real deployment the log directory moves to an object store with
   putIfAbsent semantics; every other code path is unchanged.
 * **File statistics**: every ``add`` action carries per-column min/max
-  for the table's key columns (computed in the SAME Spark job that wrote
-  the file — one pass). MERGE and pruned reads use them to touch only
-  overlapping files — the file-skipping that makes copy-on-write MERGE
-  sublinear in table size when writes are clustered (time-ordered facts:
-  a late batch overlaps one or two files, not the table).
+  for the table's key columns. Integral, string and date keys take them
+  from each written file's own parquet footer, so a commit runs no job
+  beyond the write; other key types fall back to one grouped aggregate
+  per write (see ``_write_files``). MERGE and pruned reads use them to
+  touch only overlapping files — the file-skipping that makes
+  copy-on-write MERGE sublinear in table size when writes are clustered
+  (time-ordered facts: a late batch overlaps one or two files, not the
+  table). Decimal bounds are stored as exact strings and compare as
+  ``Decimal``.
 * **MERGE (upsert)**: updates rewrite ONLY the data files whose key
   range overlaps the update keys; untouched files carry over by
   reference. With ``version_col``, the higher version wins regardless of
@@ -40,11 +44,12 @@ do, scaled to what a from-scratch repo can carry honestly:
   multi-column predicates from the manifest stats alone — Delta's
   OPTIMIZE [ZORDER BY], with the skipping effect asserted in tests.
 
-* **Schema evolution**: additive-only — appends/merges may ADD columns
-  (older files backfill NULL via parquet schema merging); dropping or
-  re-typing a column raises ``SchemaMismatch``. The per-commit schema
-  is recorded in the log, so "what columns existed at version V" is a
-  log read.
+* **Schema evolution**: additive-only — appends/merges may ADD columns;
+  dropping or re-typing a column raises ``SchemaMismatch``. The
+  per-commit schema is recorded in the log, so "what columns existed at
+  version V" is a log read, and every read of version V scans its files
+  under that recorded schema: columns an older file predates come back
+  NULL, with no footer-inference job.
 
 Not carried (documented, deliberate): bucketed layouts and a
 distributed commit service — neither changes the read/merge plans
@@ -56,9 +61,25 @@ from __future__ import annotations
 import json
 import os
 import uuid
+from decimal import Decimal
+from urllib.parse import unquote, urlparse
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+#: key types whose parquet footer min/max equal what Spark's min/max
+#: return: INT32/INT64 values, and binary-collated strings (UTF-8 bytes in
+#: unsigned order); compared by equality, so collated strings fall back
+_FOOTER_STAT_TYPES = (
+    T.ByteType(),
+    T.ShortType(),
+    T.IntegerType(),
+    T.LongType(),
+    T.StringType(),
+    T.DateType(),
+)
 
 
 class CommitConflict(Exception):
@@ -75,6 +96,47 @@ def _norm(v):
     through; dates/timestamps become ISO strings (which compare in the
     same order as the underlying instants)."""
     return v if isinstance(v, (int, float, str, type(None))) else str(v)
+
+
+def _ordered(v, dtype: str | None):
+    """A stat or bound as a value that compares in its column's order.
+    Decimal stats are stored as exact strings, which compare wrongly as
+    strings ('99.00' > '100.00'), so decimal columns compare as
+    ``Decimal``; every other stat compares as ``_norm`` stores it."""
+    if v is not None and dtype and dtype.startswith("decimal"):
+        return Decimal(str(v))
+    return _norm(v)
+
+
+def _disjoint(stats: dict, bounds: dict, types: dict) -> bool:
+    """True when a file's min/max box misses ``bounds`` ({column: (lo,
+    hi)}) on some column. A column without file stats, or with an
+    unknown bound, cannot rule the file out."""
+    for c, (lo, hi) in bounds.items():
+        if c not in stats or stats[c][0] is None or lo is None or hi is None:
+            continue
+        fmin, fmax, lo, hi = (_ordered(v, types.get(c)) for v in (*stats[c], lo, hi))
+        if fmax < lo or fmin > hi:
+            return True
+    return False
+
+
+def _footer_bounds(meta, key: str) -> list | None:
+    """[min, max] of top-level column ``key`` over every row group of one
+    parquet footer, skipping all-NULL row groups ([None, None] when all
+    are). None when a row group that holds values has no min/max."""
+    idx = [meta.schema.column(i).path for i in range(meta.num_columns)].index(key)
+    lo = hi = None
+    for r in range(meta.num_row_groups):
+        rg = meta.row_group(r)
+        st = rg.column(idx).statistics
+        if st is not None and st.has_null_count and st.null_count == rg.num_rows:
+            continue
+        if st is None or not st.has_min_max:
+            return None
+        lo = st.min if lo is None else min(lo, st.min)
+        hi = st.max if hi is None else max(hi, st.max)
+    return [_norm(lo), _norm(hi)]
 
 
 def _log_dir(path: str) -> str:
@@ -129,12 +191,20 @@ class TxnTable:
     def history(self) -> list[dict]:
         return [self._read_commit(v) for v in self.versions()]
 
-    def snapshot_files(self, version: int | None = None) -> list[dict]:
-        """Active ``add`` actions (with stats) after replaying the log
-        prefix up to ``version``."""
-        version = self.latest_version() if version is None else version
+    def _replay(self, version: int | None = None):
+        """(version, active ``add`` actions, recorded schema) at
+        ``version`` (default: the latest), from one listing of the log and
+        one parse of each commit up to it. The schema is the [name,
+        dataType] pairs of the newest commit <= version that recorded one
+        (empty for pre-evolution logs written without schemas)."""
+        vs = self.versions()
+        if version is None:
+            if not vs:
+                raise FileNotFoundError(f"no table at {self.path}")
+            version = vs[-1]
         live: dict[str, dict] = {}
-        for v in self.versions():
+        schema: list[list[str]] = []
+        for v in vs:
             if v > version:
                 break
             c = self._read_commit(v)
@@ -142,28 +212,29 @@ class TxnTable:
                 live[a["file"]] = a
             for r in c["removes"]:
                 live.pop(r, None)
-        return list(live.values())
+            schema = c.get("schema") or schema
+        return version, list(live.values()), schema
+
+    def snapshot_files(self, version: int | None = None) -> list[dict]:
+        """Active ``add`` actions (with stats) after replaying the log
+        prefix up to ``version``."""
+        return self._replay(version)[1]
 
     def table_schema(self, version: int | None = None) -> list[list[str]]:
         """[name, dataType] pairs recorded at the newest commit <= version
         (empty for pre-evolution logs written without schemas)."""
-        version = self.latest_version() if version is None else version
-        schema: list[list[str]] = []
-        for v in self.versions():
-            if v > version:
-                break
-            schema = self._read_commit(v).get("schema") or schema
-        return schema
+        return self._replay(version)[2]
 
-    def _check_schema(self, df: DataFrame) -> list[list[str]]:
-        """Enforce additive-only evolution: every existing column must
-        survive with its type; new columns may appear (older files
-        backfill them as NULL on read via parquet schema merging)."""
+    @staticmethod
+    def _check_schema(df: DataFrame, schema: list[list[str]]) -> list[list[str]]:
+        """Enforce additive-only evolution against the recorded
+        ``schema``: every existing column must survive with its type; new
+        columns may appear (older files read them back as NULL)."""
         new = [[f.name, f.dataType.simpleString()] for f in df.schema.fields]
         have = {n: t for n, t in new}
         problems = [
             f"{n}: {t} -> {have.get(n, 'DROPPED')}"
-            for n, t in self.table_schema()
+            for n, t in schema
             if have.get(n) != t
         ]
         if problems:
@@ -198,50 +269,88 @@ class TxnTable:
     # --------------------------------------------------------------- data
 
     def _write_files(self, df: DataFrame) -> list[dict]:
-        """Write ``df`` as parquet under data/ and return add-actions with
-        per-file key-column min/max stats — computed by the writing job's
-        own layout (one file per written partition file), not a second
-        scan."""
+        """Write ``df`` as parquet under data/ (one job) and return one
+        add-action per written file with its key-column [min, max].
+
+        Integral, string and date keys read their bounds from the file's
+        own parquet footer, over all row groups with all-NULL ones
+        skipped — the values Spark's ``min``/``max`` return, for no job.
+        Keys whose footers carry no min/max (INT96 timestamps, decimals,
+        oversized strings, other types) cost ONE grouped aggregate over
+        the written files by ``input_file_name()``, whatever the file
+        count. A file with no non-NULL key gets [None, None]."""
         token = uuid.uuid4().hex[:12]
         out = os.path.join(_data_dir(self.path), token)
         df.write.mode("overwrite").parquet(out)
-        adds = []
-        for f in sorted(os.listdir(out)):
-            if not f.endswith(".parquet"):
-                continue
-            rel = os.path.join("data", token, f)
-            action = {"file": rel, "stats": {}}
-            if self.key_cols:
-                part = self.spark.read.parquet(os.path.join(out, f))
-                aggs = []
-                for k in self.key_cols:
-                    aggs += [
-                        F.min(k).alias(f"min_{k}"),
-                        F.max(k).alias(f"max_{k}"),
-                    ]
-                row = part.agg(*aggs).head()
-                action["stats"] = {
-                    k: [_norm(row[f"min_{k}"]), _norm(row[f"max_{k}"])]
-                    for k in self.key_cols
-                }
-            adds.append(action)
-        return adds
+        names = sorted(f for f in os.listdir(out) if f.endswith(".parquet"))
+        stats: dict[str, dict] = {f: {} for f in names}
+        types = {fld.name: fld.dataType for fld in df.schema.fields}
+        footer = [k for k in self.key_cols if types.get(k) in _FOOTER_STAT_TYPES]
+        grouped = [k for k in self.key_cols if k not in footer]
+        metas = {f: pq.read_metadata(os.path.join(out, f)) for f in names} if footer else {}
+        for k in footer:
+            bounds = {f: _footer_bounds(metas[f], k) for f in names}
+            if any(b is None for b in bounds.values()):
+                grouped.append(k)
+            else:
+                for f, b in bounds.items():
+                    stats[f][k] = b
+        if grouped and names:
+            aggs = []
+            for k in grouped:
+                aggs += [F.min(k).alias(f"min_{k}"), F.max(k).alias(f"max_{k}")]
+            rows = (
+                self.spark.read.schema(df.schema)
+                .parquet(out)
+                .groupBy(F.input_file_name().alias("_file"))
+                .agg(*aggs)
+                .collect()
+            )
+            # input_file_name() is a URI (file:///...); files without rows
+            # have no group
+            by_name = {os.path.basename(unquote(urlparse(r["_file"]).path)): r for r in rows}
+            for f in names:
+                r = by_name.get(f)
+                for k in grouped:
+                    stats[f][k] = [_norm(r[f"min_{k}"]), _norm(r[f"max_{k}"])] if r else [None, None]
+        return [
+            {
+                "file": os.path.join("data", token, f),
+                "stats": {k: stats[f][k] for k in self.key_cols},
+            }
+            for f in names
+        ]
+
+    def _scan(self, files: list[str], schema: list[list[str]]) -> DataFrame:
+        """The rows of data ``files`` (table-relative paths) under the
+        log's recorded ``schema``: columns a file predates come back NULL,
+        and no job infers a schema from the footers. No files gives an
+        empty frame of the schema."""
+        paths = [os.path.join(self.path, f) for f in files]
+        if not schema:  # pre-evolution log: the files' own footers decide
+            if not paths:
+                raise SchemaMismatch(
+                    f"{self.path} has no recorded schema (pre-evolution "
+                    "log); cannot type an empty scan"
+                )
+            return self.spark.read.parquet(*paths)
+        ddl = ", ".join(f"`{n.replace('`', '``')}` {t}" for n, t in schema)
+        if not paths:
+            return self.spark.createDataFrame([], ddl)
+        return self.spark.read.schema(ddl).parquet(*paths)
 
     def read(self, version: int | None = None) -> DataFrame:
-        files = self.snapshot_files(version)
+        _, files, schema = self._replay(version)
         if not files:
             raise FileNotFoundError(f"empty snapshot at {self.path}")
-        # mergeSchema backfills columns added by schema evolution as NULL
-        # in files written before the column existed
-        return self.spark.read.option("mergeSchema", "true").parquet(
-            *[os.path.join(self.path, a["file"]) for a in files]
-        )
+        return self._scan([a["file"] for a in files], schema)
 
     # --------------------------------------------------------- mutations
 
     def append(self, df: DataFrame) -> int:
-        schema = self._check_schema(df)
-        v = self.latest_version() + 1
+        base_version, _, recorded = self._replay()
+        schema = self._check_schema(df, recorded)
+        v = base_version + 1
         self._commit(
             v, "append", adds=self._write_files(df), removes=[], schema=schema
         )
@@ -251,8 +360,9 @@ class TxnTable:
         # overwrite replaces ALL data, so any schema is acceptable — the
         # new schema simply becomes the table schema
         schema = [[f.name, f.dataType.simpleString()] for f in df.schema.fields]
-        v = self.latest_version() + 1
-        old = [a["file"] for a in self.snapshot_files()]
+        base_version, files, _ = self._replay()
+        v = base_version + 1
+        old = [a["file"] for a in files]
         self._commit(
             v, "overwrite", adds=self._write_files(df), removes=old, schema=schema
         )
@@ -272,9 +382,9 @@ class TxnTable:
         keys = key_cols or self.key_cols
         if not keys:
             raise ValueError("merge requires key columns")
-        self._check_schema(updates)  # validation only; commit logs merged.schema
-        base_version = self.latest_version()
-        files = self.snapshot_files(base_version)
+        base_version, files, schema = self._replay()
+        # validation only; the commit logs merged.schema
+        self._check_schema(updates, schema)
 
         # key bounds of the update set: one tiny agg (the update batch is
         # the small side by construction)
@@ -282,28 +392,16 @@ class TxnTable:
         for k in keys:
             aggs += [F.min(k).alias(f"min_{k}"), F.max(k).alias(f"max_{k}")]
         b = updates.agg(*aggs).head()
-
-        def overlaps(a: dict) -> bool:
-            st = a.get("stats") or {}
-            for k in keys:
-                if k not in st or st[k][0] is None:
-                    return True  # no stats — must assume overlap
-                fmin, fmax = st[k]
-                umin, umax = _norm(b[f"min_{k}"]), _norm(b[f"max_{k}"])
-                if fmax < umin or fmin > umax:
-                    return False  # disjoint on this key column
-            return True
-
-        hit = [a for a in files if overlaps(a)]
-        carry = [a for a in files if not overlaps(a)]
+        bounds = {k: (b[f"min_{k}"], b[f"max_{k}"]) for k in keys}
+        types = dict(schema)
+        hit, carry = [], []
+        for a in files:
+            (carry if _disjoint(a.get("stats") or {}, bounds, types) else hit).append(a)
 
         if hit:
-            # mergeSchema: the hit set may span a schema-evolution
-            # boundary; a footer-inferred schema would null evolved
-            # columns for every non-updated row in the rewrite
-            target = self.spark.read.option("mergeSchema", "true").parquet(
-                *[os.path.join(self.path, a["file"]) for a in hit]
-            )
+            # the recorded schema keeps evolved columns of every
+            # non-updated row when the hit set spans an evolution boundary
+            target = self._scan([a["file"] for a in hit], schema)
             if version_col is not None:
                 from pyspark.sql.window import Window
 
@@ -359,8 +457,7 @@ class TxnTable:
         A predicate matching nothing is a metadata no-op: no rewrite, no
         commit, version unchanged. Returns rewrite accounting including
         ``rows_deleted``."""
-        base_version = self.latest_version()
-        files = self.snapshot_files(base_version)
+        base_version, files, schema = self._replay()
         if not files:  # already-empty snapshot: nothing to scan or delete
             return {
                 "version": base_version,
@@ -372,19 +469,14 @@ class TxnTable:
             os.path.abspath(os.path.join(self.path, a["file"])): a["file"]
             for a in files
         }
-        scan = (
-            self.spark.read.option("mergeSchema", "true")
-            .parquet(*rel_by_abs)
-            .withColumn("_file", F.input_file_name())
-        )
         per_file = (
-            scan.filter(F.expr(predicate))
+            self._scan([a["file"] for a in files], schema)
+            .withColumn("_file", F.input_file_name())
+            .filter(F.expr(predicate))
             .groupBy("_file")
             .agg(F.count(F.lit(1)).alias("n"))
             .collect()
         )
-        from urllib.parse import unquote, urlparse
-
         hit_rel, rows_deleted = set(), 0
         for row in per_file:
             # input_file_name() is a URI (file:///...); snapshot paths are
@@ -400,10 +492,8 @@ class TxnTable:
                 "rows_deleted": 0,
             }
         hit = [a for a in files if a["file"] in hit_rel]
-        survivors = (
-            self.spark.read.option("mergeSchema", "true")
-            .parquet(*[os.path.join(self.path, a["file"]) for a in hit])
-            .filter(~F.coalesce(F.expr(predicate), F.lit(False)))
+        survivors = self._scan([a["file"] for a in hit], schema).filter(
+            ~F.coalesce(F.expr(predicate), F.lit(False))
         )
         adds = self._write_files(survivors)
         v = base_version + 1
@@ -412,7 +502,7 @@ class TxnTable:
             "delete",
             adds=adds,
             removes=[a["file"] for a in hit],
-            schema=self.table_schema(base_version),
+            schema=schema,
         )
         return {
             "version": v,
@@ -432,8 +522,7 @@ class TxnTable:
         untouched; each rewritten group becomes one file. Readers are
         unaffected mid-flight: the rewrite is one atomic commit that adds
         the packed files and removes exactly the packed-away inputs."""
-        base_version = self.latest_version()
-        files = self.snapshot_files(base_version)
+        base_version, files, schema = self._replay()
         small, carry = [], []
         for a in files:
             size = os.path.getsize(os.path.join(self.path, a["file"]))
@@ -457,15 +546,11 @@ class TxnTable:
             acc += size
         adds = []
         for g in groups:
-            # mergeSchema: a pack group may span a schema-evolution
-            # boundary; without it the rewrite would silently drop
-            # columns the inferred footer lacks
-            packed = (
-                self.spark.read.option("mergeSchema", "true")
-                .parquet(*[os.path.join(self.path, a["file"]) for a in g])
-                .coalesce(1)
+            # a pack group may span a schema-evolution boundary: the
+            # recorded schema keeps every column of every file
+            adds += self._write_files(
+                self._scan([a["file"] for a in g], schema).coalesce(1)
             )
-            adds += self._write_files(packed)
         self._commit(
             base_version + 1,
             "compact",
@@ -544,9 +629,8 @@ class TxnTable:
                 f"z-order columns {missing} carry no file stats — add them "
                 f"to key_cols so pruned_read can skip on them"
             )
-        base_version = self.latest_version()
-        files = self.snapshot_files(base_version)
-        full = self.read(base_version)
+        base_version, files, schema = self._replay()
+        full = self._scan([a["file"] for a in files], schema)
         z = self._zvalue_col(full, cols)
         laid = (
             full.withColumn("_z", z)
@@ -578,39 +662,15 @@ class TxnTable:
         min/max pruning still applies inside the files that are read).
         Returns (DataFrame-with-filters-applied, files_read,
         files_total)."""
-        files = self.snapshot_files(version)
-
-        def live(a: dict) -> bool:
-            st = a.get("stats") or {}
-            for c, (lo, hi) in ranges.items():
-                if c not in st or st[c][0] is None:
-                    continue  # no stats on this column — cannot skip
-                fmin, fmax = st[c]
-                if fmax < _norm(lo) or fmin > _norm(hi):
-                    return False
-            return True
-
-        hit = [a for a in files if live(a)]
-        if not hit:
-            df = self.read(version).limit(0)
-        else:
-            # mergeSchema keeps pruned reads schema-consistent with
-            # read() when the hit set spans a schema-evolution boundary
-            df = self.spark.read.option("mergeSchema", "true").parquet(
-                *[os.path.join(self.path, a["file"]) for a in hit]
-            )
+        _, files, schema = self._replay(version)
+        types = dict(schema)
+        hit = [a for a in files if not _disjoint(a.get("stats") or {}, ranges, types)]
+        df = self._scan([a["file"] for a in hit], schema)
         for c, (lo, hi) in ranges.items():
             df = df.filter((F.col(c) >= lo) & (F.col(c) <= hi))
         return df, len(hit), len(files)
 
-    # ------------------------------------------------------------ vacuum
-
-    def _read_files(self, files: list[str]) -> DataFrame | None:
-        if not files:
-            return None
-        return self.spark.read.option("mergeSchema", "true").parquet(
-            *[os.path.join(self.path, f) for f in files]
-        )
+    # --------------------------------------------------------------- CDC
 
     def snapshot_diff(self, v_from: int, v_to: int | None = None) -> dict:
         """Change-data summary between two snapshots — "what did the last
@@ -632,29 +692,21 @@ class TxnTable:
         ``rows_rewritten_unchanged`` (key rewritten byte-equal — compact /
         z-order churn, logically a no-op)."""
         v_to = self.latest_version() if v_to is None else v_to
-        self._validate_diff_versions(v_from, v_to)
-        from_files = {a["file"] for a in self.snapshot_files(v_from)}
-        to_files = {a["file"] for a in self.snapshot_files(v_to)}
-        only_from = sorted(from_files - to_files)
-        only_to = sorted(to_files - from_files)
+        old, new, shared = self._diff_sides(v_from, v_to)
         out: dict = {
             "v_from": v_from,
             "v_to": v_to,
-            "files_removed": len(only_from),
-            "files_added": len(only_to),
-            "files_unchanged": len(from_files & to_files),
+            "files_removed": len(old[0]),
+            "files_added": len(new[0]),
+            "files_unchanged": shared,
         }
         if not self.key_cols:
-            old = self._read_files(only_from)
-            new = self._read_files(only_to)
-            out["rows_in_removed_files"] = old.count() if old is not None else 0
-            out["rows_in_added_files"] = new.count() if new is not None else 0
+            out["rows_in_removed_files"] = self._scan(*old).count() if old[0] else 0
+            out["rows_in_added_files"] = self._scan(*new).count() if new[0] else 0
             return out
-        from pyspark.sql import functions as F
-
         counts = {
             r["change_type"]: r["n"]
-            for r in self._diff_frame(v_from, v_to)
+            for r in self._diff_frame(old, new)
             .groupBy("change_type")
             .agg(F.count(F.lit(1)).alias("n"))
             .collect()
@@ -681,63 +733,39 @@ class TxnTable:
                 "silently swap inserted/deleted — pass them in order"
             )
 
-    def _side(self, files: list[str], version: int) -> DataFrame:
-        """Read a diff side, conformed to the schema the commit log
-        recorded at ``version``: columns in the recorded schema that are
-        absent from every file on this side (additive evolution) are
-        backfilled as typed NULLs, so evolved columns participate in the
-        updated/unchanged split instead of being silently excluded. An
-        empty side becomes an empty frame with the recorded schema."""
-        from pyspark.sql import functions as F
-
-        schema = self.table_schema(version)
-        df = self._read_files(files)
-        if df is None:
-            if not schema:
-                raise SchemaMismatch(
-                    f"version {version} has no recorded schema "
-                    "(pre-evolution log); cannot synthesize an empty diff "
-                    "side"
-                )
-            return self.spark.createDataFrame(
-                [], ", ".join(f"{n} {t}" for n, t in schema)
-            )
-        if not schema:  # pre-evolution log: observed file columns only
-            return df
-        have = set(df.columns)
-        return df.select(
-            *[
-                F.col(n) if n in have else F.lit(None).cast(t).alias(n)
-                for n, t in schema
-            ]
+    def _diff_sides(self, v_from: int, v_to: int):
+        """(files only in v_from, its recorded schema), (files only in
+        v_to, its recorded schema) and the count of files both share —
+        one log replay per side."""
+        self._validate_diff_versions(v_from, v_to)
+        _, old, old_schema = self._replay(v_from)
+        _, new, new_schema = self._replay(v_to)
+        old_files = {a["file"] for a in old}
+        new_files = {a["file"] for a in new}
+        return (
+            (sorted(old_files - new_files), old_schema),
+            (sorted(new_files - old_files), new_schema),
+            len(old_files & new_files),
         )
 
-    def _diff_frame(self, v_from: int, v_to: int) -> DataFrame:
+    def _diff_frame(self, old_side, new_side) -> DataFrame:
         """Classified row changes over ONLY the files that differ between
-        the snapshots: change_type ('inserted'/'deleted'/'updated'/
-        'rewritten_unchanged'), the key columns (coalesced across sides),
-        then old_<col>/new_<col> for every common value column."""
-        from pyspark.sql import functions as F
-
-        if not self.key_cols:
-            raise ValueError("row-level diff requires key columns")
-        self._validate_diff_versions(v_from, v_to)
-        from_files = {a["file"] for a in self.snapshot_files(v_from)}
-        to_files = {a["file"] for a in self.snapshot_files(v_to)}
-        old = self._side(sorted(from_files - to_files), v_from)
-        new = self._side(sorted(to_files - from_files), v_to)
+        the snapshots (``_diff_sides``): change_type ('inserted'/'deleted'/
+        'updated'/'rewritten_unchanged'), the key columns (coalesced across
+        sides), then old_<col>/new_<col> for every common value column.
+        Each side reads under its version's recorded schema, so a column
+        its files predate is a typed NULL and still takes part in the
+        updated/unchanged split; an empty side is an empty typed frame."""
+        old = self._scan(*old_side)
+        new = self._scan(*new_side)
         # across a schema-evolving transition the v_to schema is a strict
         # superset (additive-only evolution): conform the OLD side up to it
         # with typed NULLs so the feed carries new_<col> for columns born
         # between the versions (a replica applying the feed needs them)
-        to_schema = self.table_schema(v_to)
-        if to_schema:
-            have = set(old.columns)
-            for cname, ctype in to_schema:
-                if cname not in have:
-                    old = old.withColumn(
-                        cname, F.lit(None).cast(ctype)
-                    )
+        have = set(old.columns)
+        for cname, ctype in new_side[1]:
+            if cname not in have:
+                old = old.withColumn(cname, F.lit(None).cast(ctype))
         common = [c for c in new.columns if c in set(old.columns)]
         value_cols = [c for c in common if c not in self.key_cols]
         # explicit presence markers: the join keys use eqNullSafe, so a
@@ -781,12 +809,15 @@ class TxnTable:
         merge carry-along) is filtered out — it is not a logical change.
         Reads only the files that differ between the snapshots (see
         snapshot_diff for why that makes CDC sublinear)."""
-        from pyspark.sql import functions as F
-
+        if not self.key_cols:
+            raise ValueError("row-level diff requires key columns")
         v_to = self.latest_version() if v_to is None else v_to
-        return self._diff_frame(v_from, v_to).filter(
+        old, new, _ = self._diff_sides(v_from, v_to)
+        return self._diff_frame(old, new).filter(
             F.col("change_type") != "rewritten_unchanged"
         )
+
+    # ------------------------------------------------------------ vacuum
 
     def vacuum(self, retain_versions: int = 1) -> list[str]:
         """Delete data files referenced by NONE of the newest

@@ -5,11 +5,15 @@ skipping, optimistic-concurrency commits, vacuum."""
 from __future__ import annotations
 
 import os
+import uuid
+from contextlib import contextmanager
+from decimal import Decimal
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from dbt_tpch_spark.tableformat import CommitConflict, TxnTable
+from dbt_tpch_spark.tableformat import CommitConflict, TxnTable, _norm
 
 
 def _rows(df):
@@ -18,6 +22,31 @@ def _rows(df):
 
 def _mk(spark, pairs):
     return spark.createDataFrame(pairs, "k long, v string")
+
+
+@contextmanager
+def _jobs(spark):
+    """Count the Spark jobs the block launches: yields a list that holds
+    the count once the block exits."""
+    sc = spark.sparkContext
+    group = uuid.uuid4().hex
+    sc.setJobGroup(group, "job count")
+    counted: list[int] = []
+    try:
+        yield counted
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        counted.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+
+
+def _grouped_query_jobs(spark) -> int:
+    """Jobs one grouped aggregate query costs in this session (two under
+    AQE: the shuffle map stage and the result)."""
+    with _jobs(spark) as n:
+        spark.range(0, 8, 1, 2).groupBy(F.col("id") % 2).agg(F.min("id")).collect()
+    return n[0]
 
 
 def test_create_append_overwrite_time_travel(spark, tmp_path):
@@ -113,7 +142,8 @@ def test_vacuum_removes_only_unreferenced(spark, tmp_path):
 
 def test_merge_timestamp_keys_prune(spark, tmp_path):
     """Timestamp key stats serialize as ISO strings and still prune
-    correctly (order-preserving)."""
+    correctly (order-preserving); having no footer min/max, they cost one
+    grouped query per write whatever the file count."""
     p = str(tmp_path / "t")
     jan = spark.sql(
         "SELECT timestamp'2026-01-15 00:00:00' AS k, 'a' AS v"
@@ -133,6 +163,25 @@ def test_merge_timestamp_keys_prune(spark, tmp_path):
         ("2026-01-15 00:00:00", "a"),
         ("2026-06-15 00:00:00", "B"),
     ]
+    # INT96 timestamps have no footer min/max: their stats cost the write
+    # plus ONE grouped query, whatever the file count
+    def batch(lo, n_files):
+        return spark.range(lo, lo + 8, 1, n_files).select(
+            F.timestamp_seconds(F.lit(1_800_000_000) + F.col("id") * 86_400).alias("k"),
+            F.lit("c").alias("v"),
+        )
+
+    grouped = _grouped_query_jobs(spark)
+    for lo, n_files in ((0, 1), (100, 4)):
+        with _jobs(spark) as n:
+            t.append(batch(lo, n_files))
+        assert n[0] == 1 + grouped, (n_files, n[0])
+        adds = t.history()[-1]["adds"]
+        assert len(adds) == n_files
+        for a in adds:
+            part = spark.read.schema("k timestamp").parquet(os.path.join(p, a["file"]))
+            want = part.agg(F.min("k"), F.max("k")).head()
+            assert a["stats"]["k"] == [_norm(want[0]), _norm(want[1])]
 
 
 def test_streaming_foreachbatch_merge_sink(spark, tmp_path, sf_dir):
@@ -305,7 +354,7 @@ def test_zorder_requires_stats_columns(spark, tmp_path):
 
 def test_schema_evolution_add_column_and_reject_retype(spark, tmp_path):
     """Additive evolution: an append may introduce a new column (old rows
-    read back as NULL via parquet schema merging); dropping or re-typing
+    read back as NULL under the log's recorded schema); dropping or re-typing
     an existing column is refused with SchemaMismatch."""
     import pyspark.sql.functions as F
     import pytest as _pytest
@@ -353,7 +402,7 @@ def test_schema_evolution_add_column_and_reject_retype(spark, tmp_path):
 
 def test_compact_and_merge_preserve_evolved_columns(spark, tmp_path):
     """Regression (review finding): compact() and merge() must read their
-    input files with schema merging — a rewrite spanning a schema-
+    input files under the table schema — a rewrite spanning a schema-
     evolution boundary used to silently drop the evolved column."""
     import pyspark.sql.functions as F
 
@@ -458,8 +507,8 @@ def test_delete_where_null_predicate_keeps_row(spark, tmp_path):
 
 def test_delete_where_across_schema_evolution(spark, tmp_path):
     """Deleting with a predicate on an evolved column must not corrupt
-    rows written before the column existed (mergeSchema on both the scan
-    and the rewrite)."""
+    rows written before the column existed (the recorded schema on both
+    the scan and the rewrite)."""
     p = str(tmp_path / "t")
     t = TxnTable.create(spark, p, _mk(spark, [(1, "a"), (2, "b")]), ["k"])
     evolved = spark.createDataFrame(
@@ -522,8 +571,8 @@ def test_snapshot_diff_overwrite_and_delete(spark, tmp_path):
 
 def test_snapshot_diff_across_schema_evolution(spark, tmp_path):
     """An append that ADDS a column must diff cleanly: old-side rows
-    lack the column (mergeSchema backfills NULL), and only the common
-    columns participate in the updated/unchanged split."""
+    lack the column (the recorded schema backfills NULL), and only the
+    common columns participate in the updated/unchanged split."""
     p = str(tmp_path / "t")
     t = TxnTable.create(spark, p, _mk(spark, [(1, "a")]).coalesce(1), ["k"])
     wide = spark.createDataFrame([(2, "b", 7.5)], "k long, v string, w double")
@@ -808,3 +857,111 @@ def _assert_cdc_replicates(spark, t, v_from, v_to, ctx_info):
     assert canonicalize(replica.toPandas()).equals(
         canonicalize(to_df.toPandas())
     ), ctx_info
+
+
+def test_append_is_one_job_and_reads_launch_none(spark, tmp_path):
+    """Integer key stats come from the written files' parquet footers: an
+    append of a 4-file frame is the write job alone, and read() /
+    pruned_read() build their frames under the log's recorded schema
+    without a footer-inference job."""
+    p = str(tmp_path / "t")
+    t = TxnTable.create(spark, p, spark.sql("SELECT 0L AS k, 'a' AS v"), ["k"])
+    four = spark.range(10, 410, 1, 4).select(F.col("id").alias("k"), F.lit("b").alias("v"))
+    with _jobs(spark) as n:
+        t.append(four)
+    assert n == [1]
+    assert len(t.history()[-1]["adds"]) == 4
+    with _jobs(spark) as n:
+        full = t.read()
+        pruned, files_read, files_total = t.pruned_read({"k": (10, 109)})
+    assert n == [0]
+    assert (files_read, files_total) == (1, 5)
+    assert full.count() == 401
+    assert sorted(r["k"] for r in pruned.collect()) == list(range(10, 110))
+
+
+def test_footer_stats_equal_spark_min_max(spark, tmp_path):
+    """For int, string and date keys the footer stats of every written
+    file equal Spark's min/max over that file: multi-row-group files
+    whose leading row groups are all-NULL, an all-NULL file and an empty
+    write included."""
+    p = str(tmp_path / "t")
+    cols = ["i", "s", "d"]
+
+    def frame(lo, hi, parts, null_below):
+        key = F.when(F.col("id") >= null_below, F.col("id"))
+        return spark.range(lo, hi, 1, parts).select(
+            key.cast("int").alias("i"),
+            key.cast("string").alias("s"),
+            F.date_add(F.lit("2020-01-01").cast("date"), key.cast("int")).alias("d"),
+        )
+
+    spark.conf.set("parquet.block.size", "1024")  # ~100-row row groups
+    try:
+        t = TxnTable.create(spark, p, frame(0, 3000, 2, 700), cols)
+    finally:
+        spark.conf.unset("parquet.block.size")
+    first = t.history()[0]["adds"]
+    assert max(pq.read_metadata(os.path.join(p, a["file"])).num_row_groups for a in first) > 1
+    t.append(frame(0, 50, 1, 10**6).coalesce(1))  # every key NULL
+    t.append(frame(0, 0, 1, 0))  # empty write
+    n_files = 0
+    for commit in t.history():
+        for a in commit["adds"]:
+            want = spark.read.parquet(os.path.join(p, a["file"])).agg(
+                *[F.min(c) for c in cols], *[F.max(c) for c in cols]
+            ).head()
+            assert a["stats"] == {
+                c: [_norm(want[j]), _norm(want[j + len(cols)])] for j, c in enumerate(cols)
+            }, a
+            n_files += 1
+    assert n_files >= 3
+    assert t.history()[1]["adds"][0]["stats"]["i"] == [None, None]
+
+
+def test_read_under_recorded_schema_matches_merge_schema_read(spark, tmp_path):
+    """A read across an additive schema change returns the same rows and
+    column order as a parquet schema-merging read of the same files:
+    columns an older file predates come back NULL."""
+    p = str(tmp_path / "t")
+    narrow = spark.sql("SELECT * FROM VALUES (1L, 'a'), (2L, 'b') AS t(k, v)")
+    t = TxnTable.create(spark, p, narrow, ["k"])
+    wide = spark.sql(
+        "SELECT * FROM VALUES (3L, 'c', 7.5D, 'x'), (4L, 'd', NULL, 'y') AS t(k, v, w, tag)"
+    )
+    t.append(wide)
+    for version in (0, 1):
+        files = [os.path.join(p, a["file"]) for a in t.snapshot_files(version)]
+        want = spark.read.option("mergeSchema", "true").parquet(*files)
+        got = t.read(version)
+        assert got.columns == want.columns
+        assert [f.dataType for f in got.schema] == [f.dataType for f in want.schema]
+        assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+    assert t.read().columns == ["k", "v", "w", "tag"]
+
+
+def test_merge_decimal_keys_across_digit_boundary(spark, tmp_path):
+    """Decimal key bounds compare in numeric order: the file spanning
+    99.00-100.50 overlaps an update keyed 100.00 (as strings, '99.00' >
+    '100.00' would carry the file over and duplicate the key)."""
+    p = str(tmp_path / "t")
+
+    def rows(values):
+        return spark.sql(
+            f"SELECT CAST(k AS DECIMAL(10,2)) AS k, v FROM VALUES {values} AS t(k, v)"
+        ).coalesce(1)
+
+    t = TxnTable.create(spark, p, rows("('99.00', 'a'), ('100.00', 'b'), ('100.50', 'c')"), ["k"])
+    t.append(rows("('200.00', 'z')"))
+    df, files_read, _ = t.pruned_read({"k": (Decimal("100.00"), Decimal("100.00"))})
+    assert files_read == 1 and [r["v"] for r in df.collect()] == ["b"]
+
+    rep = t.merge(rows("('100.00', 'B')"))
+    assert rep["files_rewritten"] == 1 and rep["files_skipped"] == 1
+    got = sorted((str(r["k"]), r["v"]) for r in t.read().collect())
+    assert got == [("100.00", "B"), ("100.50", "c"), ("200.00", "z"), ("99.00", "a")]
+
+    # an update batch with no key bounds (here: no rows) cannot rule a
+    # file out and leaves the snapshot as it was
+    t.merge(rows("('1.00', 'x')").limit(0))
+    assert sorted((str(r["k"]), r["v"]) for r in t.read().collect()) == got
