@@ -11,13 +11,16 @@
 #   SPARK_GRAFT_SF_DIR and SPARK_GRAFT_CPUS pass through to bench.py.
 #   Make the baseline with `git clone` or `git archive` of the base commit.
 #
-# Workload mode: BASE_DIR=... OUT_DIR=... ./ab.sh <workload> [pairs]
-#   Runs `perfbench/run.py --workload <workload> --seconds 10 --trace 0`
-#   for <pairs> pairs (default 10), alternating which tree runs first in
-#   each pair, archives {base,head}_<pair>.{stdout,stderr} and prints each
-#   side's median and quartiles and the head's wins per pair (lower wins,
-#   ties count for neither) for setup_s, cpu_s and exec_cpu_s, plus the
-#   steal_pct range and every run's correct/failed.
+# Workload mode: BASE_DIR=... OUT_DIR=... ./ab.sh <workload> [pairs] [seed]
+#   Runs `perfbench/run.py --workload <workload> --seed <seed> --seconds 10
+#   --trace 0` for <pairs> pairs (default 10; seed default 1, run.py's own
+#   default), alternating which tree runs first in each pair, archives
+#   {base,head}_<pair>.{stdout,stderr} and prints each side's median and
+#   quartiles and the head's wins per pair (lower wins, ties count for
+#   neither) for setup_s, cpu_s and exec_cpu_s, plus the steal_pct range and
+#   every run's correct/failed. One verdict line per metric follows: the
+#   median gap (base - head), the base's q3-q1, the head's wins, and whether
+#   a gain claim holds (wins >= 0.9 x pairs and gap > base q3-q1).
 set -u
 HERE=$(cd "$(dirname "$0")" && pwd)
 BASE_DIR=${BASE_DIR:?set BASE_DIR to a checkout of the baseline commit}
@@ -25,9 +28,9 @@ HEAD_DIR=${HEAD_DIR:-$HERE}
 OUT_DIR=${OUT_DIR:?set OUT_DIR to the directory that archives the records}
 mkdir -p "$OUT_DIR" && OUT_DIR=$(cd "$OUT_DIR" && pwd)
 if [ $# -ge 1 ]; then
-  WORKLOAD=$1 PAIRS=${2:-10}
+  WORKLOAD=$1 PAIRS=${2:-10} SEED=${3:-1}
   runw() { # runw <dir> <tag>
-    ( cd "$1" && python3 perfbench/run.py --workload "$WORKLOAD" --seconds 10 --trace 0 \
+    ( cd "$1" && python3 perfbench/run.py --workload "$WORKLOAD" --seed "$SEED" --seconds 10 --trace 0 \
         > "$OUT_DIR/$2.stdout" 2> "$OUT_DIR/$2.stderr" )
     echo "done $2"
   }
@@ -56,14 +59,24 @@ steal = [rec["host"]["steal_pct"] for side in runs.values() for rec, _ in side]
 print(f"steal_pct {min(steal):.1f}-{max(steal):.1f}")
 for side, rs in runs.items():
     print(side, "correct/failed", [(res["correct"], res["failed"]) for _, res in rs])
+verdicts = []
 for m in ("setup_s", "cpu_s", "exec_cpu_s"):
     vals = {side: [res["metrics"][m]["value"] for _, res in rs] for side, rs in runs.items()}
     wins = sum(h < b for b, h in zip(vals["base"], vals["head"]))
-    stats = []
+    stats, quart = [], {}
     for side in ("base", "head"):
-        q1, med, q3 = statistics.quantiles(vals[side], n=4, method="inclusive")
+        q1, med, q3 = quart[side] = statistics.quantiles(vals[side], n=4, method="inclusive")
         stats.append(f"{side} {med:.2f} (q1 {q1:.2f}, q3 {q3:.2f})")
     print(f"{m}: {'; '.join(stats)}; head wins {wins}/{pairs}")
+    # a gain needs >= 9/10 wins and a median gap wider than the base's own
+    # interquartile spread
+    gap, iqr = quart["base"][1] - quart["head"][1], quart["base"][2] - quart["base"][0]
+    holds = wins >= 0.9 * pairs and gap > iqr
+    verdicts.append(
+        f"{m} verdict: median gap {gap:+.2f}, base q3-q1 {iqr:.2f},"
+        f" head wins {wins}/{pairs}: gain {'holds' if holds else 'not shown'}"
+    )
+print("\n".join(verdicts))
 EOF
   exit
 fi

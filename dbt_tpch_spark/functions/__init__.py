@@ -157,20 +157,22 @@ def housekeeping(batch_id: str, batch_ts: str):
     ]
 
 
-def inrow_sorted_pairs(arr: str, a_name: str, b_name: str) -> Column:
-    """Every unordered pair ``x < y`` of a SORTED, DISTINCT array column,
-    expanded in-row as an array of ``struct(a_name, b_name)`` — the
-    co-purchase/basket expansion shared by ``int_market_basket`` and the
-    graph wedge family (guide §2.1/§3: replaces a key self-join + a<b
-    filter with one in-row expansion of half the rows and zero join
-    machinery). Emits exactly ``size(arr) * (size(arr) - 1) / 2`` structs;
-    callers bound ``size(arr)`` by construction (basket size, degree cap)
-    and the skew-tail fixture in tests/test_skew.py pins the expansion's
+def explode_sorted_pairs(df, arr: str, a_name: str, b_name: str, *keep: str):
+    """One row ``(*keep, a_name, b_name)`` per unordered pair ``x < y`` of
+    the SORTED, DISTINCT array column ``arr`` — the co-purchase/basket
+    expansion shared by ``int_market_basket`` and the graph family
+    (replaces a key self-join + a<b filter with one in-row expansion of
+    half the rows and zero join machinery). ``posexplode`` + ``explode``
+    of the suffix slice are compiled generators under whole-stage codegen,
+    where a ``transform`` lambda is interpreted (CodegenFallback). Emits
+    exactly ``size(arr) * (size(arr) - 1) / 2`` rows per input row;
+    callers bound ``size(arr)`` by construction (basket size) and the
+    skew-tail fixture in tests/test_skew.py pins the expansion's
     equivalence to the self-join on planted baskets up to 500 items."""
-    return F.expr(
-        f"flatten(transform({arr}, (x, i) ->"
-        f" transform(slice({arr}, i + 2, size({arr})),"
-        f" y -> struct(x AS {a_name}, y AS {b_name}))))"
+    return df.select(*keep, arr, F.posexplode(arr).alias("_pair_i", a_name)).select(
+        *keep,
+        a_name,
+        F.explode(F.slice(arr, F.col("_pair_i") + 2, F.size(arr))).alias(b_name),
     )
 
 

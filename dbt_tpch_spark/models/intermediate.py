@@ -12,8 +12,8 @@ from dbt_tpch_spark.functions import (
     davg,
     days_between,
     dsum,
+    explode_sorted_pairs,
     gated_broadcast,
-    inrow_sorted_pairs,
     isum,
     rnd,
 )
@@ -340,7 +340,8 @@ def int_market_basket(ctx):
     # expansion (see operators/graph._edges) — collapse each order to its
     # sorted distinct part set ONCE (collect_set dedups, so the old
     # distinct() shuffle is absorbed into this aggregate) and expand every
-    # x < y pair IN-ROW from the basket: the self-join (two probe-side
+    # x < y pair IN-ROW from the basket with compiled generators
+    # (functions.explode_sorted_pairs): the self-join (two probe-side
     # exchanges + join machinery) disappears and the per-order expansion
     # is bounded by basket size (TPC-H orders hold ≤ 7 lineitems).
     # The basket frame is order-grain and feeds both the pair expansion
@@ -353,12 +354,7 @@ def int_market_basket(ctx):
         .localCheckpoint(eager=True)
     )
     pairs = (
-        baskets.select(
-            # round-12: same expansion, now the shared helper pinned by
-            # the planted giant-basket fixture (tests/test_skew.py)
-            F.explode(inrow_sorted_pairs("ps", "part_a", "part_b")).alias("p")
-        )
-        .select("p.part_a", "p.part_b")
+        explode_sorted_pairs(baskets, "ps", "part_a", "part_b")
         .groupBy("part_a", "part_b")
         .agg(
             # one in-row pair per (order, part pair) — the same unique-

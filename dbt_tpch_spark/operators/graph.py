@@ -13,7 +13,9 @@ This is the second *iterative* algorithm with full DuckDB-oracle parity
   as generated CTE text (contrib_i -> pr_i), the SQL mirror of the Spark
   loop;
 - per-node in-sums quantize each contribution to DECIMAL(38,18) and sum
-  exactly (accumulation-order-free, like dedup.DOT_SPARK);
+  exactly (accumulation-order-free, like dedup.DOT_SPARK); the Spark side
+  quantizes once per source node on the node-grain state frame, not once
+  per edge — the same cast of the same double, so the sums are identical;
 - rank values are re-quantized (rnd 12) every round so both engines carry
   bit-identical state into the next iteration.
 
@@ -34,7 +36,7 @@ from pyspark.sql import functions as F
 
 from dbt_tpch_spark.models.oracle import oracle, rnd_sql
 from dbt_tpch_spark.plans import model
-from dbt_tpch_spark.functions import global_row_number, rnd
+from dbt_tpch_spark.functions import explode_sorted_pairs, global_row_number, rnd
 
 DAMPING = 0.85
 TELEPORT = 0.15  # 1 - DAMPING, kept as an exact literal on both engines
@@ -45,41 +47,30 @@ ITERS = 3
 _PR_DECIMAL = "decimal(38,18)"
 
 
-def _psum(col):
-    return F.sum(col.cast(_PR_DECIMAL)).cast("double")
-
-
 def _psum_sql(expr: str) -> str:
     return f"CAST(SUM(CAST(({expr}) AS DECIMAL(38,18))) AS DOUBLE)"
+
+
+def _baskets(ctx):
+    """Per-order sorted distinct part set ``(o, ps)`` from lineitem."""
+    return (
+        ctx.source("lineitem")
+        .groupBy(F.col("l_orderkey").alias("o"))
+        .agg(F.sort_array(F.collect_set("l_partkey")).alias("ps"))
+    )
 
 
 def _pairs(ctx):
     """Canonical distinct co-purchase pairs (src < dst) from lineitem.
 
     Pair generation is in-row, not a self-join: parts collect (sorted,
-    deduped) per order and the x<y pairs expand positionally inside the
-    array — one shuffle on the order key instead of shuffle+join+shuffle.
-    Per-order fan-out is quadratic in basket size, which is small and
-    bounded (TPC-H ~4 items/order); the oracle keeps the equivalent
-    self-join formulation (same pair SET, different plan)."""
-    baskets = (
-        ctx.source("lineitem")
-        .groupBy(F.col("l_orderkey").alias("o"))
-        .agg(F.sort_array(F.collect_set("l_partkey")).alias("ps"))
-    )
-    return (
-        baskets.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ps, (x, i) ->"
-                    " transform(slice(ps, i + 2, size(ps)),"
-                    " y -> struct(x AS src, y AS dst))))"
-                )
-            ).alias("e")
-        )
-        .select("e.src", "e.dst")
-        .distinct()
-    )
+    deduped) per order and the x<y pairs expand positionally with compiled
+    generators (functions.explode_sorted_pairs) — one shuffle on the order
+    key instead of shuffle+join+shuffle. Per-order fan-out is quadratic in
+    basket size, which is small and bounded (TPC-H ~4 items/order); the
+    oracle keeps the equivalent self-join formulation (same pair SET,
+    different plan)."""
+    return explode_sorted_pairs(_baskets(ctx), "ps", "src", "dst").distinct()
 
 
 def _edges(ctx, n_part: int | None = None):
@@ -89,31 +80,26 @@ def _edges(ctx, n_part: int | None = None):
     Round-11 optimization: the old form (``_pairs().unionByName(flip)``)
     evaluated the basket-explode + distinct pipeline TWICE (once per union
     branch) and spent three exchanges (groupBy(o), distinct(src,dst), the
-    callers' repartition(src)). Both directions of every pair now expand
-    in-row from the same basket, and the dedup aggregate runs ON TOP of
-    the hash(src) repartition — hash(src) satisfies the (src, dst)
-    clustering requirement (subset rule), so the whole build is ONE basket
-    shuffle + ONE edge shuffle, already laid out the way every consumer
-    (degree aggregates, per-src windows, per-round joins) wants it."""
+    callers' repartition(src)). Every x<y pair now expands in-row from the
+    basket (functions.explode_sorted_pairs) and one more generator emits
+    both directions of it, and the dedup aggregate runs ON TOP of the
+    hash(src) repartition — hash(src) satisfies the (src, dst) clustering
+    requirement (subset rule), so the whole build is ONE basket shuffle +
+    ONE edge shuffle, already laid out the way every consumer (degree
+    aggregates, per-src windows, per-round joins) wants it."""
     if n_part is None:
         n_part = int(ctx.spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    baskets = (
-        ctx.source("lineitem")
-        .groupBy(F.col("l_orderkey").alias("o"))
-        .agg(F.sort_array(F.collect_set("l_partkey")).alias("ps"))
-    )
+    x, y = F.col("x"), F.col("y")
     return (
-        baskets.select(
-            F.explode(
-                F.expr(
-                    "flatten(flatten(transform(ps, (x, i) ->"
-                    " transform(slice(ps, i + 2, size(ps)),"
-                    " y -> array(struct(x AS src, y AS dst),"
-                    "            struct(y AS src, x AS dst))))))"
+        explode_sorted_pairs(_baskets(ctx), "ps", "x", "y")
+        .select(
+            F.inline(
+                F.array(
+                    F.struct(x.alias("src"), y.alias("dst")),
+                    F.struct(y.alias("src"), x.alias("dst")),
                 )
-            ).alias("e")
+            )
         )
-        .select("e.src", "e.dst")
         .repartition(n_part, "src")
         .dropDuplicates(["src", "dst"])
     )
@@ -176,13 +162,13 @@ def parts_pagerank(ctx):
         .localCheckpoint(eager=True)
     )
     for _ in range(ITERS):
+        # quantize each node's contribution ONCE on the node-grain state:
+        # the oracle's per-edge cast of the same double, so bit-identical
+        c = (F.col("pr") / F.col("outdeg")).cast(_PR_DECIMAL).alias("c")
         contrib = (
-            edges.join(
-                _state(pr.select("node", "outdeg", "pr")),
-                edges.src == F.col("node"),
-            )
+            edges.join(_state(pr.select("node", c)), edges.src == F.col("node"))
             .groupBy("dst")
-            .agg(_psum(F.col("pr") / F.col("outdeg")).alias("insum"))
+            .agg(F.sum("c").cast("double").alias("insum"))
         )
         pr = (
             pr.drop("pr")

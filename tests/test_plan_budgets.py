@@ -842,6 +842,12 @@ def test_pagerank_copartition_mode_has_no_state_broadcast(spark, sf_dir):
             r"Exchange hashpartitioning\(src#\d+L, \d+\), ENSURE_REQUIREMENTS",
             plan,
         ), plan
+        # contributions are quantized once per node on the state side, so
+        # no round casts per edge inside its partial sum; and the cached
+        # edge build expands pairs with compiled generators, not an
+        # interpreted higher-order lambda
+        assert "partial_sum(cast(" not in plan, plan
+        assert "lambdafunction" not in plan, plan
     assert df.count() > 0
 
 

@@ -54,7 +54,7 @@ def test_inrow_pair_expansion_handles_giant_basket_tail(spark):
     500-item baskets). The expansion must equal the order-key self-join it
     replaced — same pair set, one row per (order, x<y pair) — and emit
     exactly C(n,2) structs per basket."""
-    from dbt_tpch_spark.functions import inrow_sorted_pairs
+    from dbt_tpch_spark.functions import explode_sorted_pairs
 
     rows = []
     # normal TPC-H-shaped baskets plus the planted skew tail
@@ -64,10 +64,7 @@ def test_inrow_pair_expansion_handles_giant_basket_tail(spark):
     baskets = items.groupBy("order_key").agg(
         F.sort_array(F.collect_set("part_key")).alias("ps")
     )
-    expanded = baskets.select(
-        "order_key",
-        F.explode(inrow_sorted_pairs("ps", "part_a", "part_b")).alias("p"),
-    ).select("order_key", "p.part_a", "p.part_b")
+    expanded = explode_sorted_pairs(baskets, "ps", "part_a", "part_b", "order_key")
     # the self-join reference the rewrite replaced
     a = items.withColumnsRenamed({"part_key": "part_a"})
     b = items.withColumnsRenamed({"part_key": "part_b"})
