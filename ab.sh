@@ -20,7 +20,9 @@
 #   neither) for setup_s, cpu_s and exec_cpu_s, plus the steal_pct range and
 #   every run's correct/failed. One verdict line per metric follows: the
 #   median gap (base - head), the base's q3-q1, the head's wins, and whether
-#   a gain claim holds (wins >= 0.9 x pairs and gap > base q3-q1).
+#   a gain claim holds (wins >= 0.9 x pairs and gap > base q3-q1). An
+#   information line with each side's median record-only wall_s (from the
+#   full record) comes last, with no verdict.
 set -u
 HERE=$(cd "$(dirname "$0")" && pwd)
 BASE_DIR=${BASE_DIR:?set BASE_DIR to a checkout of the baseline commit}
@@ -77,6 +79,12 @@ for m in ("setup_s", "cpu_s", "exec_cpu_s"):
         f" head wins {wins}/{pairs}: gain {'holds' if holds else 'not shown'}"
     )
 print("\n".join(verdicts))
+# record-only wall time, no verdict: shows whether a CPU gain traded wall
+walls = {
+    side: statistics.median(rec["end_to_end"]["wall_s"]["value"] for rec, _ in rs)
+    for side, rs in runs.items()
+}
+print(f"wall_s (info): base median {walls['base']:.2f}; head median {walls['head']:.2f}")
 EOF
   exit
 fi

@@ -16,8 +16,10 @@ layer, and materialization. ``ref()``/``source()`` mirror dbt's functions
   Catalyst prunes columns across the whole DAG), ``cache`` persists the
   DataFrame (best when many downstream models fan out from one fact, e.g.
   fct_orders_items feeding 24 report models), ``parquet`` writes and re-reads
-  (the faithful CTAS, what a 100 TB deployment would do per layer), ``txn``
-  writes each build as a new snapshot of a transactional table
+  (the faithful CTAS, what a 100 TB deployment would do per layer) through
+  ``warehouse.write_table`` — one file when the planner bounds the table
+  below ``warehouse.ONE_FILE_BYTES``, re-read under the written schema —
+  ``txn`` writes each build as a new snapshot of a transactional table
   (tableformat.TxnTable) so successive DAG builds are time-travelable.
 """
 
@@ -109,9 +111,9 @@ class Context:
         if self.table_policy == "parquet":
             if not self.warehouse_dir:
                 raise ValueError("table_policy='parquet' requires warehouse_dir")
-            path = f"{self.warehouse_dir}/{name}"
-            df.write.mode("overwrite").parquet(path)
-            return self.spark.read.parquet(path)
+            from dbt_tpch_spark.warehouse import write_table
+
+            return write_table(df, f"{self.warehouse_dir}/{name}")
         if self.table_policy == "txn":
             # versioned CTAS: each build lands as a new snapshot of the
             # transactional table (tableformat.TxnTable), so successive DAG

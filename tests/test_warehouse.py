@@ -4,6 +4,7 @@ plan survives a 100x scale-up."""
 
 from __future__ import annotations
 
+import os
 import tempfile
 
 import pytest
@@ -189,3 +190,63 @@ def test_insert_overwrite_rejects_high_cardinality_partition_col(
     df = spark.range(100).withColumnRenamed("id", "k")
     with pytest.raises(ValueError, match="not a partition grain"):
         wh.write_insert_overwrite(df, spark, str(tmp_path / "t"), "k")
+
+
+def _next_job_id(spark) -> int:
+    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+
+def _files(path: str) -> int:
+    return sum(f.endswith(".parquet") for f in os.listdir(path))
+
+
+def test_reread_under_written_schema_launches_no_job(spark, tmp_path):
+    """Re-reading a table the engine just wrote takes the schema from the
+    frame it wrote, so no schema-inference job runs, and the schema still
+    equals the inferred one — nullability included, since a file-source
+    read forces every field nullable."""
+    import dbt_tpch_spark.warehouse as wh
+
+    df = spark.sql(
+        "SELECT id, CAST(id AS INT) AS i, CAST(id AS DECIMAL(38, 18)) AS d,"
+        " timestamp_seconds(id) AS ts"
+        " FROM range(5)"
+    )
+    assert not any(f.nullable for f in df.schema.fields)
+    path = str(tmp_path / "t")
+    back = wh.write_table(df, path)
+    before = _next_job_id(spark)
+    again = wh._reread(df, path)
+    assert _next_job_id(spark) == before
+    inferred = spark.read.parquet(path).schema
+    assert back.schema == again.schema == inferred
+    assert sorted(back.collect()) == sorted(df.collect())
+
+
+def test_write_table_one_file_only_when_planner_bounds_it(spark, tmp_path, monkeypatch):
+    """A small frame becomes one file; a plan with a Generate or a Python
+    map operator (their estimates ignore the rows they fan out to) or an
+    estimate above the bound keeps one file per partition."""
+    import dbt_tpch_spark.warehouse as wh
+
+    small = spark.range(0, 40, 1, 4)
+    wh.write_table(small, str(tmp_path / "small"))
+    assert _files(str(tmp_path / "small")) == 1
+
+    exploded = small.select(F.explode(F.array("id", "id")).alias("id"))
+    back = wh.write_table(exploded, str(tmp_path / "exploded"))
+    assert _files(str(tmp_path / "exploded")) == 4
+    assert back.count() == 80
+
+    def twice(batches):
+        for b in batches:
+            yield b
+            yield b
+
+    mapped = small.mapInPandas(twice, schema=small.schema)
+    wh.write_table(mapped, str(tmp_path / "mapped"))
+    assert _files(str(tmp_path / "mapped")) == 4
+
+    monkeypatch.setattr(wh, "ONE_FILE_BYTES", 1)
+    wh.write_table(small, str(tmp_path / "over"))
+    assert _files(str(tmp_path / "over")) == 4
