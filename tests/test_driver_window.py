@@ -130,25 +130,23 @@ def test_trim_reclaims_slot_of_never_witnessed_anchor(monkeypatch):
     assert not missing, f"never-witnessed spilled despite fitting: {missing}"
 
 
-def test_rotation_retires_oldest_witnesses_first():
-    """Round-10 (VERDICT r9 #3): once the never-witnessed ledger is closed,
-    spare slots must go to the queries whose last driver witness is oldest
-    (rounds 2-3 debt), not re-confirm the registry prefix forever."""
-    latest = entry_mod._witness_rounds()
-    eligible = entry_mod._eligible()
-    never = [n for n in eligible if n not in latest]
-    if never:  # a fresh-query round: rotation yields to the ledger
-        return
+def _window_before_repair(monkeypatch) -> tuple[str, ...]:
+    """The window ``_derive_window`` builds before its stratification
+    repair pass: the anchors plus the oldest-first fill alone."""
+    with monkeypatch.context() as m:
+        m.setattr(entry_mod, "_repair_stratification", lambda w, *_: w)
+        return entry_mod._derive_window()
+
+
+def _assert_retires_oldest_first(latest, eligible, window, before_repair):
     newest = max(latest.values())
-    stale_in_window = sum(
-        1
-        for n in entry_mod._DRIVER_WINDOW
-        if newest - latest.get(n, 0) >= entry_mod._STALE_AGE
-    )
+
+    def stale(n):
+        return newest - latest.get(n, 0) >= entry_mod._STALE_AGE
+
+    stale_in_window = sum(1 for n in window if stale(n))
     # nearly every non-anchor slot retires rotation debt while any exists
-    total_stale = sum(
-        1 for n in eligible if newest - latest[n] >= entry_mod._STALE_AGE
-    )
+    total_stale = sum(1 for n in eligible if stale(n))
     expected = min(total_stale, entry_mod._WINDOW_SIZE - 6) - len(
         entry_mod._FAMILY_PREDICATES
     )
@@ -156,19 +154,68 @@ def test_rotation_retires_oldest_witnesses_first():
         f"only {stale_in_window} stale witnesses in the window "
         f"(expected >= {expected} of {total_stale} due)"
     )
-    # and the stale slots taken are the OLDEST ones (allowing the
-    # stratification repair to swap in a few newer family reps)
+    # and the stale slots taken are the OLDEST ones. The stratification
+    # repair may swap in one rep per family the fill crowded out: the
+    # oldest member of that family, which can be newer than the fill's
+    # cut-off and even stale itself (its family's oldest witness is that
+    # young). So the swapped-in names are the ones the pre-repair window
+    # lacks; the rest of the stale names must be the oldest prefix of the
+    # due list, which the repair keeps by evicting the youngest tail.
+    swapped_in = set(window) - set(before_repair)
+    assert len(swapped_in) <= len(entry_mod._FAMILY_PREDICATES), swapped_in
     window_stale_rounds = sorted(
-        latest[n]
-        for n in entry_mod._DRIVER_WINDOW
-        if newest - latest.get(n, 0) >= entry_mod._STALE_AGE
+        latest[n] for n in window if stale(n) and n not in swapped_in
     )
-    due_rounds = sorted(
-        latest[n]
-        for n in eligible
-        if newest - latest[n] >= entry_mod._STALE_AGE
-    )[: len(window_stale_rounds)]
+    due_rounds = sorted(latest[n] for n in eligible if stale(n))[
+        : len(window_stale_rounds)
+    ]
     assert window_stale_rounds == due_rounds
+
+
+def test_rotation_retires_oldest_witnesses_first(monkeypatch):
+    """Round-10 (VERDICT r9 #3): once the never-witnessed ledger is closed,
+    spare slots must go to the queries whose last driver witness is oldest
+    (rounds 2-3 debt), not re-confirm the registry prefix forever. The
+    oldest-first order is checked on the window before the stratification
+    repair pass; the names that pass swaps in are left out."""
+    latest = entry_mod._witness_rounds()
+    eligible = entry_mod._eligible()
+    never = [n for n in eligible if n not in latest]
+    if never:  # a fresh-query round: rotation yields to the ledger
+        return
+    before_repair = _window_before_repair(monkeypatch)
+    _assert_retires_oldest_first(
+        latest, eligible, entry_mod._DRIVER_WINDOW, before_repair
+    )
+
+
+def test_rotation_allows_stale_family_rep_newer_than_fill_cutoff(monkeypatch):
+    """The same two checks on a fixed ledger, whatever CORRECTNESS_r*.json
+    files exist: every query witnessed, far more stale names than slots,
+    and every non-anchor ann/kmeans query stale at round 7 while the
+    oldest-first fill stops at round 4, so the repair must swap in a stale
+    ann/kmeans rep newer than the fill's cut-off."""
+    eligible = entry_mod._eligible()
+    ann = entry_mod._FAMILY_PREDICATES[1]
+    latest = {}
+    for i, n in enumerate(x for x in eligible if not ann(x)):
+        latest[n] = 3 + i % 10  # rounds 3..12: 3..7 are stale at newest 12
+    latest.update((n, 7) for n in eligible if ann(n))
+    # anchors sit in every window, so their witness is always the newest
+    latest.update((n, 12) for n in entry_mod._ANCHORS)
+    monkeypatch.setattr(entry_mod, "_witness_rounds", lambda: latest)
+
+    window = entry_mod._derive_window()
+    before_repair = _window_before_repair(monkeypatch)
+    _assert_retires_oldest_first(latest, eligible, window, before_repair)
+    # the case this ledger exists for: the fill crowds ann/kmeans out, and
+    # the rep the repair brings back is stale yet newer than the cut-off
+    assert not any(ann(n) for n in before_repair)
+    cutoff = max(
+        latest[n] for n in before_repair if n not in entry_mod._ANCHORS
+    )
+    swapped_ann = [n for n in window if ann(n)]
+    assert swapped_ann and all(cutoff < latest[n] <= 7 for n in swapped_ann)
 
 
 def test_stratification_repair_never_strands_a_family(monkeypatch):
