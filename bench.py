@@ -89,6 +89,35 @@ def _steal_pct(before: list[int] | None, after: list[int] | None):
     return round(d[7] / busy * 100, 2) if busy > 0 else None
 
 
+def _jvm_pid(spark) -> int | None:
+    """Process id of the session's JVM (None when it cannot be read)."""
+    try:
+        return int(spark._jvm.java.lang.ProcessHandle.current().pid())
+    except Exception:
+        return None
+
+
+def _process_cpu_sec(jvm_pid: int | None) -> float | None:
+    """Process-level CPU seconds so far: the JVM's
+    utime+stime+cutime+cstime from /proc/<jvm_pid>/stat plus this Python
+    driver's ``time.process_time()``. Per-query deltas show what executor
+    CPU (``queries_cpu_sec``) leaves out: forked helper processes once
+    reaped (Hadoop's readlink/chmod), JIT, GC and driver-side planning.
+    Long-lived Python workers are not counted: the PySpark daemon and its
+    workers outlive the query, and a child's CPU reaches cutime/cstime
+    only when it is reaped. None when the JVM's stat is unreadable."""
+    if jvm_pid is None:
+        return None
+    try:
+        with open(f"/proc/{jvm_pid}/stat") as fh:
+            # fields after the parenthesized comm; utime..cstime are 14-17
+            fields = fh.read().rsplit(")", 1)[1].split()
+        ticks = sum(int(x) for x in fields[11:15])
+    except (OSError, IndexError, ValueError):
+        return None
+    return ticks / os.sysconf("SC_CLK_TCK") + time.process_time()
+
+
 def _calib_work(_arg=None) -> int:
     x = 0
     for i in range(20_000_000):
@@ -292,6 +321,8 @@ def main() -> None:
 
         timings: dict[str, float] = {}
         cpu_secs: dict[str, float] = {}
+        proc_cpu_secs: dict[str, float] = {}
+        jvm_pid = _jvm_pid(spark)
         total = 0.0
         cpu_before = stage_totals(spark)
         # per-query steal attribution (round 10): the host's bursts are
@@ -300,6 +331,7 @@ def main() -> None:
         query_steal: dict[str, float] = {}
         for name in names:
             q_ticks = _cpu_ticks()
+            q_proc = _process_cpu_sec(jvm_pid)
             start = time.perf_counter()
             try:
                 df = Context(spark, data_dir).ref(name)
@@ -311,6 +343,8 @@ def main() -> None:
                 # one broken query must not zero the whole bench record
                 errors[name] = traceback.format_exc()[-500:]
                 elapsed = None
+            # read before the status-store walk, whose cost is not the query's
+            proc_after = _process_cpu_sec(jvm_pid)
             if q_ticks is not None:
                 qs = _steal_pct(q_ticks, _cpu_ticks())
                 if qs is not None:
@@ -321,6 +355,8 @@ def main() -> None:
                 total += elapsed
                 if cpu_before is not None and cpu_after is not None:
                     cpu_secs[name] = round((cpu_after[0] - cpu_before[0]) / 1e9, 3)
+                if q_proc is not None and proc_after is not None:
+                    proc_cpu_secs[name] = round(proc_after - q_proc, 3)
             cpu_before = cpu_after
 
         # full-DAG warehouse build: the engine analogue of the reference's
@@ -360,6 +396,10 @@ def main() -> None:
         # executor CPU seconds per query (stage-sum deltas): flat CPU with
         # inflated wall = host contention; both inflated = plan regression
         "queries_cpu_sec": cpu_secs,
+        # process CPU per query (JVM incl. reaped children + Python
+        # driver): the excess over queries_cpu_sec is fork, JIT, GC and
+        # driver overhead, visible without a profiler
+        "queries_proc_cpu_sec": proc_cpu_secs,
         "sf": sf,
         "n_queries": len(names),
         "n_failed": n_failed,

@@ -4,6 +4,20 @@ Local test posture is ``local[$SPARK_GRAFT_CPUS]``; the same settings are the
 ones we would ship for a multi-executor cluster (AQE on, adaptive partition
 coalescing, broadcast threshold) — only memory/shuffle sizing changes with
 scale.
+
+Stream checkpoints (offsets, commits, state-store deltas, sink logs) are
+committed through ``FileSystemBasedCheckpointFileManager``: its atomic
+create writes a temp file and calls the two-argument ``FileSystem.rename``,
+which forks no process on a local path. Spark's default FileContext manager
+resolves links on every rename, and without libhadoop the local file
+system resolves each one by forking a ``readlink`` process (four per
+rename, two more for the ``.crc`` sidecar). The cluster difference: on
+HDFS the two-argument rename refuses an existing destination, so
+``createAtomic(..., overwriteIfPossible=True)`` keeps the first complete
+copy (for example, a retried state-store delta) instead of replacing it.
+Spark has the same behaviour on every file system it falls back to this
+manager for, and Hadoop's checksummed local file system refuses the same
+rename, so local runs keep the first copy too.
 """
 
 from __future__ import annotations
@@ -40,6 +54,15 @@ def get_spark(app_name: str = "dbt-tpch-spark", shuffle_partitions: int | None =
         # and the default 1000-stage retention would evict early stages
         # mid-bench, corrupting the deltas
         .config("spark.ui.retainedStages", "50000")
+        # commit stream checkpoint files with FileSystem.rename: the default
+        # FileContext manager forks a readlink per link lookup on a local
+        # path without libhadoop. An overwrite of an existing checkpoint
+        # file keeps the first copy, on HDFS as locally (module docstring)
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
     )
     spark = builder.getOrCreate()
     _quiet_benign_window_warnings(spark)

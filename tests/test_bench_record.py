@@ -134,6 +134,25 @@ def test_healthy_compact_record_has_exact_key_set():
     assert set(c) == COMPACT_KEYS
 
 
+def test_full_record_keeps_process_cpu_per_query():
+    """The full record carries process-level CPU per query beside the
+    executor stage sums; it stays out of the compact stdout record, and
+    the /proc reader covers the given process and the driver."""
+    import os
+    import time
+
+    assert "queries_proc_cpu_sec" in bench.main.__code__.co_consts
+    rec = _record(5, 0, 0)
+    rec["queries_proc_cpu_sec"] = {n: 2.0 for n in rec["queries"]}
+    assert "queries_proc_cpu_sec" not in bench.compact_record(rec, None)
+
+    driver = time.process_time()
+    own = bench._process_cpu_sec(os.getpid())
+    # this process counted as the "JVM" plus itself as the driver
+    assert own is not None and own >= 2 * driver - 0.05
+    assert bench._process_cpu_sec(None) is None
+
+
 def test_tools_share_the_one_status_store_walk():
     """profile_queries.py and scale_probe.py import the stage walk from
     bench; a rename there must fail here. And the walk exists once: no

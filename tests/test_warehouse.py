@@ -103,30 +103,32 @@ def test_write_incremental(spark, sf_dir, tmp_path):
 def test_merge_upsert(spark, sf_dir, tmp_path):
     from dbt_tpch_spark.warehouse import merge_upsert
 
+    def rows(*values):
+        # a local relation, not a parallelized Python RDD: on local[N] each
+        # action over a createDataFrame(list) input runs N tasks
+        sql = ", ".join(f"({k}, '{v}', {ver})" for k, v, ver in values)
+        return spark.sql(f"SELECT * FROM VALUES {sql} AS t(k, v, ver)")
+
     path = str(tmp_path / "state")
-    base = spark.createDataFrame(
-        [(1, "a", 1), (2, "b", 1), (3, "c", 1)], "k int, v string, ver int"
-    )
+    base = rows((1, "a", 1), (2, "b", 1), (3, "c", 1))
     r1 = merge_upsert(spark, path, base, ["k"])
     assert r1 == {"inserted": 3, "updated": 0}
 
-    updates = spark.createDataFrame(
-        [(2, "B", 2), (4, "d", 2)], "k int, v string, ver int"
-    )
+    updates = rows((2, "B", 2), (4, "d", 2))
     r2 = merge_upsert(spark, path, updates, ["k"])
     assert r2 == {"inserted": 1, "updated": 1}
     got = {(r.k, r.v) for r in spark.read.parquet(path).collect()}
     assert got == {(1, "a"), (2, "B"), (3, "c"), (4, "d")}
 
     # versioned merge: replaying an OLD batch must not clobber newer rows
-    stale = spark.createDataFrame([(2, "old", 1)], "k int, v string, ver int")
+    stale = rows((2, "old", 1))
     merge_upsert(spark, path, stale, ["k"], version_col="ver")
     got = {(r.k, r.v) for r in spark.read.parquet(path).collect()}
     assert got == {(1, "a"), (2, "B"), (3, "c"), (4, "d")}
 
     # EQUAL-version collision: the update side must win deterministically
     # (replaying a corrected same-version batch converges on the new value)
-    tie = spark.createDataFrame([(2, "B2", 2)], "k int, v string, ver int")
+    tie = rows((2, "B2", 2))
     merge_upsert(spark, path, tie, ["k"], version_col="ver")
     got = {(r.k, r.v) for r in spark.read.parquet(path).collect()}
     assert got == {(1, "a"), (2, "B2"), (3, "c"), (4, "d")}
