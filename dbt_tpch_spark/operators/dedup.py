@@ -266,9 +266,7 @@ JOIN sizes sb ON i.doc_b = sb.doc_id""",
 
 
 def _doc_parallelism(ctx) -> int:
-    import os
-
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    return ctx.spark.sparkContext.defaultParallelism
 
 
 def tokens_df(ctx, extra_cols=()):

@@ -117,37 +117,6 @@ def write_bucketed(
 # --------------------------------------------------------------------------
 
 
-def _topo_levels(targets: set[str]) -> list[list[str]]:
-    """Topological levels of the model DAG restricted to ``targets``, using
-    the dependency edges declared in the oracle registry (same DAG as the
-    Spark side)."""
-    from dbt_tpch_spark.models.oracle import ORACLE
-
-    def table_deps(name: str, seen: set[str]) -> set[str]:
-        out: set[str] = set()
-        for d in ORACLE.get(name, ((), ""))[0]:
-            if d in seen:
-                continue
-            seen.add(d)
-            if d in targets:
-                out.add(d)
-            else:
-                out |= table_deps(d, seen)
-        return out
-
-    deps = {n: table_deps(n, set()) for n in targets}
-    levels: list[list[str]] = []
-    remaining = dict(deps)
-    while remaining:
-        ready = sorted(n for n, ds in remaining.items() if not ds & set(remaining))
-        if not ready:
-            raise ValueError(f"dependency cycle among {sorted(remaining)}")
-        levels.append(ready)
-        for n in ready:
-            del remaining[n]
-    return levels
-
-
 def build_warehouse(
     spark: SparkSession,
     sf_dir: str,
@@ -158,11 +127,12 @@ def build_warehouse(
     cost_hint: dict[str, float] | None = None,
 ) -> dict[str, str]:
     """Materialize every table-model of the given layers to parquet with
-    `write_table`, level-by-level (downstream levels read the written
-    artifacts, re-read under the schema each write just produced, exactly
-    like dbt's CTAS boundaries over tables whose schema the database
-    keeps), with ``parallelism`` concurrent writes per level (dbt's
-    ``threads: 4`` — reference profiles.yml:8).
+    `write_table`, level-by-level over `lineage.build_order`'s topological
+    levels (downstream levels read the written artifacts, re-read under
+    the schema each write just produced, exactly like dbt's CTAS
+    boundaries over tables whose schema the database keeps), with
+    ``parallelism`` concurrent writes per level (dbt's ``threads: 4`` —
+    reference profiles.yml:8).
 
     Spark's scheduler accepts concurrent job submission from threads; each
     write is an independent job so executors stay busy across models.
@@ -188,6 +158,7 @@ def build_warehouse(
     import time
     from concurrent.futures import ThreadPoolExecutor
 
+    from dbt_tpch_spark.lineage import build_order
     from dbt_tpch_spark.plans import MODELS, Context
 
     ctx = Context(spark, sf_dir)
@@ -206,7 +177,7 @@ def build_warehouse(
                 time.perf_counter() - t0, 3
             )
 
-    for level in _topo_levels(targets):
+    for level in build_order(targets):
         if cost_hint:
             top = max(cost_hint.values(), default=0.0)
             level = sorted(

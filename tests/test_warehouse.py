@@ -62,11 +62,18 @@ def test_bucketed_join_has_no_exchange(spark, sf_dir, tmp_path):
 
 
 def test_build_warehouse_concurrent(spark, sf_dir, tmp_path):
+    from dbt_tpch_spark.lineage import build_order
     from dbt_tpch_spark.warehouse import build_warehouse
 
+    timings: dict = {}
     paths = build_warehouse(
-        spark, sf_dir, str(tmp_path / "wh"), parallelism=4, layers=("ods", "wh")
+        spark, sf_dir, str(tmp_path / "wh"), parallelism=4, layers=("ods", "wh"),
+        timings=timings,
     )
+    # the build runs lineage's topological levels, one timing row each
+    assert [l["n_tables"] for l in timings["levels"]] == [
+        len(level) for level in build_order(paths)
+    ]
     # every table-model of those layers materialized
     assert {"ods_orders", "orders_items", "fct_orders", "fct_orders_items",
             "dim_customer", "dim_part", "dim_supplier",
