@@ -156,33 +156,6 @@ def _calibrate() -> tuple[float, float, float | None]:
     )
 
 
-def _dag_cost_hint() -> dict[str, float]:
-    """Per-table prior walls for LPT dispatch of the full-DAG phase:
-    the max recorded ``dag_tables`` wall per table across every bench
-    record next to this file (max across records — host tax inflates
-    all tables of a run roughly uniformly, so relative order, which is
-    all LPT needs, survives). Empty before the first decomposed record,
-    in which case build_warehouse keeps its original dispatch order."""
-    import glob
-
-    hint: dict[str, float] = {}
-    here = os.path.dirname(os.path.abspath(__file__))
-    paths = glob.glob(os.path.join(here, "BENCH_r*.json"))
-    paths.append(os.path.join(here, "BENCH_LAST_FULL.json"))
-    for path in paths:
-        try:
-            with open(path) as fh:
-                rec = json.load(fh)
-        except Exception:
-            continue
-        if isinstance(rec.get("parsed"), dict):
-            rec = rec["parsed"]
-        for name, sec in (rec.get("dag_tables") or {}).items():
-            if isinstance(sec, (int, float)):
-                hint[name] = max(hint.get(name, 0.0), float(sec))
-    return hint
-
-
 #: corpus tables worth re-laying-out before timing (see _presplit_corpus)
 SPLIT_TABLES = ("lineitem", "orders", "events", "documents", "embeddings", "customer", "part")
 
@@ -366,7 +339,6 @@ def main() -> None:
 
         full_build, n_tables = None, 0
         dag_timings: dict = {}
-        dag_hint = _dag_cost_hint()
         try:
             with tempfile.TemporaryDirectory() as d:
                 start = time.perf_counter()
@@ -377,7 +349,6 @@ def main() -> None:
                     parallelism=4,
                     layers=("ods", "wh", "intermediate", "metrics", "reports", "extended"),
                     timings=dag_timings,
-                    cost_hint=dag_hint,
                 )
                 full_build = round(time.perf_counter() - start, 3)
                 n_tables = len(paths)
@@ -416,16 +387,12 @@ def main() -> None:
         "full_dag_build_sec": full_build,
         "full_dag_tables": n_tables,
         # wall decomposition of the full-DAG phase (VERDICT r9 #5): per-
-        # table walls (overlapping — 4 concurrent writes per level) and the
-        # serial per-level walls that sum to full_dag_build_sec, so a
-        # cross-round drift is attributable to a table instead of a mystery.
-        # Full record only — far too large for the compact stdout budget.
+        # table walls (overlapping — up to 4 concurrent writes) and one
+        # build row {"n_tables", "sec"}, so a cross-round drift is
+        # attributable to a table instead of a mystery. Full record only —
+        # far too large for the compact stdout budget.
         "dag_tables": dag_timings.get("tables", {}),
         "dag_levels": dag_timings.get("levels", []),
-        # True when prior per-table walls drove longest-first dispatch
-        # (LPT packing) — first round with hints is not wall-comparable
-        # to hintless rounds on the DAG phase
-        "dag_lpt_scheduled": bool(dag_hint),
         "setup_split_sec": round(split_sec, 3),
         # host load before/after: a contended record is visibly contended
         "loadavg_before": load_before,

@@ -58,25 +58,6 @@ def downstream(name: str) -> set[str]:
     return out
 
 
-def build_order(targets=None) -> list[list[str]]:
-    """Topological levels over the (optionally restricted) model set —
-    the order build_warehouse materializes, exposed as lineage data."""
-    deps = _deps()
-    names = set(deps) if targets is None else set(targets)
-    remaining = {
-        n: {d for d in upstream(n)["models"] if d in names} for n in names
-    }
-    levels: list[list[str]] = []
-    while remaining:
-        ready = sorted(n for n, ds in remaining.items() if not ds & set(remaining))
-        if not ready:
-            raise ValueError(f"dependency cycle among {sorted(remaining)}")
-        levels.append(ready)
-        for n in ready:
-            del remaining[n]
-    return levels
-
-
 def to_dot(root: str | None = None) -> str:
     """Graphviz DOT text of the lineage graph (whole DAG, or the
     upstream+downstream neighborhood of ``root``)."""

@@ -866,11 +866,10 @@ def dedup_multibatch_txn(ctx):
     Index location (round-11, VERDICT r10 #5): the band index is a REAL
     table, so it lives under ``ctx.warehouse_dir`` when the Context has
     one — the same executor-shared location every other materialized
-    table uses on a cluster. Only when the Context is warehouse-less
-    (view-policy test contexts) does it fall back to a driver-local
-    tempdir, which is correct on local[n] but assumes executors share
-    the driver's filesystem — a production ingest always passes a
-    warehouse/object-store path."""
+    table uses on a cluster. Only for a Context without ``warehouse_dir``
+    does it fall back to a driver-local tempdir, which is correct on
+    local[n] but assumes executors share the driver's filesystem — a
+    production ingest always passes a warehouse/object-store path."""
     import shutil
     import tempfile
 

@@ -11,16 +11,12 @@ layer, and materialization. ``ref()``/``source()`` mirror dbt's functions
   (dbt_project.yml:29-30).
 * ``view``       (intermediate/)         -> lazy, memoized DataFrame.
 * ``table``      (ods/wh/metrics/reports)-> a real optimization boundary in
-  the reference (CREATE TABLE AS, dbt_project.yml:31-40). The engine makes
-  this a *policy*: ``lazy`` keeps composing (best for single-query runs —
-  Catalyst prunes columns across the whole DAG), ``cache`` persists the
-  DataFrame (best when many downstream models fan out from one fact, e.g.
-  fct_orders_items feeding 24 report models), ``parquet`` writes and re-reads
-  (the faithful CTAS, what a 100 TB deployment would do per layer) through
-  ``warehouse.write_table`` — one file when the planner bounds the table
-  below ``warehouse.ONE_FILE_BYTES``, re-read under the written schema —
-  ``txn`` writes each build as a new snapshot of a transactional table
-  (tableformat.TxnTable) so successive DAG builds are time-travelable.
+  the reference (CREATE TABLE AS, dbt_project.yml:31-40). ``ref()`` keeps
+  composing it lazily (best for single-query runs — Catalyst prunes columns
+  across the whole DAG); ``warehouse.build_warehouse`` is the faithful CTAS
+  (what a 100 TB deployment does per layer): it writes every table model
+  through ``warehouse.write_table`` and downstream models read the written
+  artifacts.
 """
 
 from __future__ import annotations
@@ -52,7 +48,7 @@ class ModelSpec:
 MODELS: dict[str, ModelSpec] = {}
 
 #: temp views Context.sql registered itself: view name -> weakref to the
-#: owning Context. Lets a later Context (different sf_dir/policy) rebind
+#: owning Context. Lets a later Context (different sf_dir/vars) rebind
 #: them without ever touching user-created views.
 _ENGINE_VIEWS: dict = {}
 
@@ -73,18 +69,16 @@ class Context:
         spark: SparkSession,
         sf_dir: str,
         variables: dict | None = None,
-        table_policy: str = "lazy",  # lazy | cache | parquet | txn
         warehouse_dir: str | None = None,
     ):
         self.spark = spark
         self.sf_dir = sf_dir
         self.vars = {**DEFAULT_VARS, **(variables or {})}
-        self.table_policy = table_policy
         self.warehouse_dir = warehouse_dir
         self._built: dict[str, DataFrame] = {}
-        # build_warehouse materializes level-mates from worker threads; the
-        # lock keeps ref() memoization single-writer (DataFrames themselves
-        # are immutable, so races would only waste plan construction)
+        # build_warehouse writes tables from worker threads; the lock keeps
+        # ref() memoization single-writer (DataFrames themselves are
+        # immutable, so races would only waste plan construction)
         import threading
 
         self._lock = threading.RLock()
@@ -98,44 +92,8 @@ class Context:
     def ref(self, name: str) -> DataFrame:
         with self._lock:
             if name not in self._built:
-                spec = MODELS[name]
-                df = spec.fn(self)
-                if spec.materialization == "table":
-                    df = self._apply_table_policy(name, df)
-                self._built[name] = df
+                self._built[name] = MODELS[name].fn(self)
             return self._built[name]
-
-    def _apply_table_policy(self, name: str, df: DataFrame) -> DataFrame:
-        if self.table_policy == "cache":
-            return df.cache()
-        if self.table_policy == "parquet":
-            if not self.warehouse_dir:
-                raise ValueError("table_policy='parquet' requires warehouse_dir")
-            from dbt_tpch_spark.warehouse import write_table
-
-            return write_table(df, f"{self.warehouse_dir}/{name}")
-        if self.table_policy == "txn":
-            # versioned CTAS: each build lands as a new snapshot of the
-            # transactional table (tableformat.TxnTable), so successive DAG
-            # builds are time-travelable ("what did training read last
-            # week" is a version pin) instead of overwrites
-            if not self.warehouse_dir:
-                raise ValueError("table_policy='txn' requires warehouse_dir")
-            import os
-
-            from dbt_tpch_spark.tableformat import TxnTable
-
-            path = f"{self.warehouse_dir}/{name}"
-            if os.path.isdir(os.path.join(path, "_log")):
-                t = TxnTable(self.spark, path)
-                t.overwrite(df)
-            else:
-                t = TxnTable.create(self.spark, path, df)
-            return t.read()
-        return df
-
-    def invalidate(self) -> None:
-        self._built.clear()
 
     def sql(self, query: str) -> DataFrame:
         """Run ad-hoc Spark SQL against the model catalog — the interface a
@@ -160,7 +118,7 @@ class Context:
         from dbt_tpch_spark.sources import TABLES
 
         # a view registered by a PREVIOUS Context must not satisfy this
-        # context's query (it would pin the old sf_dir/policy): drop it and
+        # context's query (it would pin the old sf_dir/vars): drop it and
         # let the lazy re-registration below rebind only what's referenced.
         # If the user has since REPLACED the view with their own, cede
         # ownership and leave it alone (sameResult check against the plan

@@ -8,11 +8,11 @@
   the reference's CTAS table boundaries, which DuckDB re-sorts internally).
 
 Both produce ordinary catalog tables readable by name. The simple
-unpartitioned case — dbt's CTAS — is `write_table`, shared by
-`build_warehouse` and the model registry's ``table_policy='parquet'``: it
-writes a table the planner bounds below `ONE_FILE_BYTES` as one file, and
-re-reads it under the schema it just wrote, so downstream models read the
-written artifact without a schema-inference job.
+unpartitioned case — dbt's CTAS — is `write_table`, which `build_warehouse`
+runs for every table model: it writes a table the planner bounds below
+`ONE_FILE_BYTES` as one file, and re-reads it under the schema it just
+wrote, so downstream models read the written artifact without a
+schema-inference job.
 """
 
 from __future__ import annotations
@@ -113,7 +113,7 @@ def write_bucketed(
 
 
 # --------------------------------------------------------------------------
-# full-DAG warehouse build (dbt's threads-N scheduler equivalent)
+# full-DAG warehouse build (dbt's threads-N runner equivalent)
 # --------------------------------------------------------------------------
 
 
@@ -124,41 +124,29 @@ def build_warehouse(
     parallelism: int = 4,
     layers: tuple[str, ...] = ("ods", "wh", "metrics", "reports"),
     timings: dict | None = None,
-    cost_hint: dict[str, float] | None = None,
 ) -> dict[str, str]:
     """Materialize every table-model of the given layers to parquet with
-    `write_table`, level-by-level over `lineage.build_order`'s topological
-    levels (downstream levels read the written artifacts, re-read under
-    the schema each write just produced, exactly like dbt's CTAS
-    boundaries over tables whose schema the database keeps), with
-    ``parallelism`` concurrent writes per level (dbt's ``threads: 4`` —
-    reference profiles.yml:8).
-
-    Spark's scheduler accepts concurrent job submission from threads; each
-    write is an independent job so executors stay busy across models.
+    `write_table`, dbt's ``threads: 4`` runner (reference profiles.yml:8):
+    a table starts as soon as every target table it reads is written, with
+    at most ``parallelism`` writes in flight. Downstream models read the
+    written artifacts, re-read under the schema each write just produced,
+    exactly like dbt's CTAS boundaries. Ready tables dispatch by how many
+    target tables are downstream of them (most first), then by name.
+    Spark's scheduler accepts concurrent job submission from threads, so
+    each write is an independent job. A failed write fails the build.
     Returns {model: artifact_path}.
 
-    ``timings`` (VERDICT r9 #5): pass a dict to receive the build's wall
-    decomposition — ``timings["tables"][model]`` is the per-table wall
-    (plan + write, INCLUDING scheduler contention from the other
-    ``parallelism-1`` concurrent writes of its level) and
-    ``timings["levels"]`` the serial per-level walls that sum to the
-    total. This is what makes a cross-round full-DAG drift attributable
-    to a table instead of a mystery.
-
-    ``cost_hint`` (round-10 DAG-drift adjudication): optional
-    {model: prior wall seconds}. Each level dispatches
-    longest-known-first (LPT packing — within 4/3 of the optimal
-    makespan for the ``parallelism``-lane schedule), so a handful of
-    ~5-9 s window-family tables can't land in one lane late and stretch
-    the level by their sum. Unknown tables run first (they might be
-    big). Without hints, dispatch order is the topo level's sorted
-    order, as before.
+    ``timings``: pass a dict to receive the build's wall decomposition —
+    ``timings["tables"][model]`` is the per-table wall (plan + write,
+    INCLUDING scheduler contention from the other concurrent writes) and
+    ``timings["levels"]`` one row, ``{"n_tables": N, "sec": <build
+    wall>}``.
     """
     import time
-    from concurrent.futures import ThreadPoolExecutor
+    from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
+    from graphlib import TopologicalSorter
 
-    from dbt_tpch_spark.lineage import build_order
+    from dbt_tpch_spark.lineage import upstream
     from dbt_tpch_spark.plans import MODELS, Context
 
     ctx = Context(spark, sf_dir)
@@ -167,35 +155,42 @@ def build_warehouse(
         for n, s in MODELS.items()
         if s.materialization == "table" and s.layer in layers
     }
-    written: dict[str, DataFrame] = {}
+    deps = {n: upstream(n)["models"] & targets for n in targets}
+    fanout = {n: sum(n in ds for ds in deps.values()) for n in targets}
+    graph = TopologicalSorter(deps)
+    graph.prepare()
 
-    def write(name: str) -> None:
+    def write(name: str) -> DataFrame:
         t0 = time.perf_counter()
-        written[name] = write_table(MODELS[name].fn(ctx), f"{warehouse_dir}/{name}")
+        df = write_table(MODELS[name].fn(ctx), f"{warehouse_dir}/{name}")
         if timings is not None:
             timings.setdefault("tables", {})[name] = round(
                 time.perf_counter() - t0, 3
             )
+        return df
 
-    for level in build_order(targets):
-        if cost_hint:
-            top = max(cost_hint.values(), default=0.0)
-            level = sorted(
-                level, key=lambda n: -cost_hint.get(n, top + 1.0)
-            )
-        t0 = time.perf_counter()
-        with ThreadPoolExecutor(max_workers=parallelism) as pool:
-            list(pool.map(write, level))
-        # downstream levels must read the materialized artifacts
-        ctx._built.update(written)
-        if timings is not None:
-            timings.setdefault("levels", []).append(
-                {
-                    "n_tables": len(level),
-                    "sec": round(time.perf_counter() - t0, 3),
-                }
-            )
-    return {n: f"{warehouse_dir}/{n}" for n in written}
+    t0 = time.perf_counter()
+    ready: list[str] = []
+    running: dict = {}
+    with ThreadPoolExecutor(max_workers=parallelism) as pool:
+        while graph.is_active():
+            ready = sorted([*ready, *graph.get_ready()], key=lambda n: (-fanout[n], n))
+            while ready and len(running) < parallelism:
+                name = ready.pop(0)
+                running[pool.submit(write, name)] = name
+            done, _ = wait(running, return_when=FIRST_COMPLETED)
+            for fut in done:
+                name = running.pop(fut)
+                df = fut.result()
+                # downstream tables must read the written artifact
+                with ctx._lock:
+                    ctx._built[name] = df
+                graph.done(name)
+    if timings is not None:
+        timings["levels"] = [
+            {"n_tables": len(targets), "sec": round(time.perf_counter() - t0, 3)}
+        ]
+    return {n: f"{warehouse_dir}/{n}" for n in sorted(targets)}
 
 
 # --------------------------------------------------------------------------

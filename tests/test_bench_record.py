@@ -122,7 +122,6 @@ def test_healthy_compact_record_has_exact_key_set():
             "queries_steal_pct": {n: 0.5 for n in bench.HEADLINE},
             "dag_tables": {"fct_orders": 1.0},
             "dag_levels": [1.0],
-            "dag_lpt_scheduled": True,
             "setup_split_sec": 2.0,
             "loadavg_before": [0.1, 0.1, 0.1],
             "loadavg_after": [0.2, 0.2, 0.2],

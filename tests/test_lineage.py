@@ -28,15 +28,6 @@ def test_downstream_impact_of_a_model():
     assert "fct_orders" not in down  # strict descendants only
 
 
-def test_build_order_levels_respect_deps():
-    levels = lineage.build_order(["ods_orders", "fct_orders", "orders_items",
-                                  "customer_rfm_segments"])
-    pos = {n: i for i, lvl in enumerate(levels) for n in lvl}
-    assert pos["ods_orders"] < pos["fct_orders"]
-    assert pos["orders_items"] < pos["fct_orders"]
-    assert pos["fct_orders"] < pos["customer_rfm_segments"]
-
-
 def test_unknown_model_raises():
     with pytest.raises(KeyError):
         lineage.upstream("not_a_model")

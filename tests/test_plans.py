@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import functions as F
 
 from dbt_tpch_spark.plans import MODELS, Context, import_all_models
@@ -26,27 +24,6 @@ def test_registry_covers_all_layers():
 def test_ref_memoizes(spark, sf_dir):
     ctx = Context(spark, sf_dir)
     assert ctx.ref("fct_orders") is ctx.ref("fct_orders")
-
-
-def test_parquet_table_policy_roundtrip(spark, sf_dir):
-    with tempfile.TemporaryDirectory() as wh:
-        lazy = Context(spark, sf_dir).ref("rpt_pricing_summary")
-        mat = Context(
-            spark, sf_dir, table_policy="parquet", warehouse_dir=wh
-        ).ref("rpt_pricing_summary")
-        a = {tuple(r) for r in lazy.collect()}
-        b = {tuple(r) for r in mat.collect()}
-        assert a == b
-
-
-def test_cache_table_policy(spark, sf_dir):
-    ctx = Context(spark, sf_dir, table_policy="cache")
-    df = ctx.ref("fct_orders")
-    try:
-        assert df.count() == df.count() > 0
-        assert df.storageLevel.useMemory
-    finally:
-        df.unpersist()
 
 
 def test_config_var_drives_q1_cutoff(spark, sf_dir):

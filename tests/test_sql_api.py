@@ -53,10 +53,10 @@ def test_sql_join_model_with_source(spark, sf_dir):
 def test_sql_prunes_columns_through_model_boundary(spark, sf_dir):
     """Selecting one column from a wide model must narrow the parquet scan:
     the temp view is a named lazy plan, not a materialization fence."""
-    # Spark's CacheManager matches plan fragments session-wide: if another
-    # test cached this model (table_policy="cache"), the InMemoryRelation
-    # (all columns) would be substituted here and mask the pruning under
-    # test. Clearing the cache isolates the lazy-plan property.
+    # Spark's CacheManager matches plan fragments session-wide: any plan
+    # another test cached would be substituted here as an InMemoryRelation
+    # (all columns) and mask the pruning under test. Clearing the cache
+    # isolates the lazy-plan property.
     spark.catalog.clearCache()
     ctx = Context(spark, sf_dir)
     plan = (

@@ -242,25 +242,6 @@ def test_streaming_foreachbatch_merge_sink(spark, tmp_path, sf_dir):
     assert got == want and got
 
 
-def test_txn_table_policy_versions_dag_builds(spark, tmp_path, sf_dir):
-    """table_policy='txn': each DAG build of a table-model lands as a new
-    snapshot; the previous build stays readable by version pin."""
-    from dbt_tpch_spark.plans import Context, import_all_models
-
-    import_all_models()
-    wh = str(tmp_path / "wh")
-    ctx1 = Context(spark, sf_dir, table_policy="txn", warehouse_dir=wh)
-    n1 = ctx1.ref("fct_orders").count()
-    assert n1 > 0
-    ctx2 = Context(spark, sf_dir, table_policy="txn", warehouse_dir=wh)
-    n2 = ctx2.ref("fct_orders").count()
-    assert n2 == n1
-
-    t = TxnTable(spark, f"{wh}/fct_orders")
-    assert [c["operation"] for c in t.history()] == ["create", "overwrite"]
-    assert t.read(version=0).count() == n1  # first build still pinned
-
-
 def test_compact_bin_packs_small_files(spark, tmp_path):
     """Many small append files collapse into few packed files in one
     atomic commit; content is unchanged and the pre-compaction snapshot

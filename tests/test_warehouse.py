@@ -62,7 +62,6 @@ def test_bucketed_join_has_no_exchange(spark, sf_dir, tmp_path):
 
 
 def test_build_warehouse_concurrent(spark, sf_dir, tmp_path):
-    from dbt_tpch_spark.lineage import build_order
     from dbt_tpch_spark.warehouse import build_warehouse
 
     timings: dict = {}
@@ -70,10 +69,8 @@ def test_build_warehouse_concurrent(spark, sf_dir, tmp_path):
         spark, sf_dir, str(tmp_path / "wh"), parallelism=4, layers=("ods", "wh"),
         timings=timings,
     )
-    # the build runs lineage's topological levels, one timing row each
-    assert [l["n_tables"] for l in timings["levels"]] == [
-        len(level) for level in build_order(paths)
-    ]
+    # one build row: the whole ready-queue run
+    assert [l["n_tables"] for l in timings["levels"]] == [len(paths)]
     # every table-model of those layers materialized
     assert {"ods_orders", "orders_items", "fct_orders", "fct_orders_items",
             "dim_customer", "dim_part", "dim_supplier",
@@ -83,6 +80,46 @@ def test_build_warehouse_concurrent(spark, sf_dir, tmp_path):
     lazy = {tuple(r) for r in ctx.ref("rpt_pricing_summary").collect()}
     built = {tuple(r) for r in spark.read.parquet(paths["rpt_pricing_summary"]).collect()}
     assert lazy == built
+
+
+def test_build_warehouse_starts_tables_when_their_upstream_is_written(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A table starts as soon as the target tables it reads are written,
+    not when its whole topological level is. ``customers`` (whose only
+    downstream table in ods/wh is dim_customer) holds its lane until
+    ``fct_orders_items`` (which reads only orders_items) starts; a level
+    barrier would keep fct_orders_items waiting on customers."""
+    import threading
+
+    from dbt_tpch_spark import lineage, warehouse
+
+    real = warehouse.write_table
+    fct_started = threading.Event()
+    events: list[tuple[str, str]] = []
+    waited: list[bool] = []
+
+    def write_table(df, path):
+        name = os.path.basename(path)
+        events.append(("start", name))
+        if name == "fct_orders_items":
+            fct_started.set()
+        if name == "customers":
+            waited.append(fct_started.wait(timeout=30))
+        out = real(df, path)
+        events.append(("return", name))
+        return out
+
+    monkeypatch.setattr(warehouse, "write_table", write_table)
+    paths = warehouse.build_warehouse(
+        spark, sf_dir, str(tmp_path / "wh"), parallelism=4, layers=("ods", "wh")
+    )
+    assert waited == [True]
+    # every write starts after all its upstream target tables returned
+    pos = {e: i for i, e in enumerate(events)}
+    for name in paths:
+        for up in lineage.upstream(name)["models"] & set(paths):
+            assert pos[("return", up)] < pos[("start", name)], (up, name)
 
 
 def test_write_incremental(spark, sf_dir, tmp_path):
