@@ -46,10 +46,4 @@ _LAYER_MODULES = (
 
 def load_all() -> None:
     for mod in _LAYER_MODULES:
-        try:
-            importlib.import_module(mod)
-        except ModuleNotFoundError as exc:
-            # layers are added incrementally; only swallow *our* missing
-            # modules, never a dependency typo inside an existing one
-            if exc.name != mod:
-                raise
+        importlib.import_module(mod)

@@ -337,66 +337,21 @@ def dedup_minhash_lsh(ctx):
     This is the 100 TB dedup path: signatures are a single projection,
     candidates come from a groupBy-join on band hashes (shuffle bounded by
     band-bucket sizes), and the expensive exact verify runs only on
-    candidate pairs."""
-    from pyspark.sql import Window
-
-    bands = lsh_band_rows(ctx.source("documents"), _doc_parallelism(ctx))
-    # hot-bucket valve: one window count on the same key the join shuffles
-    # on (partitioning reused), drop degenerate buckets before pairing
-    w_bucket = Window.partitionBy("band_idx", "band_hash")
-    bands = bands.withColumn("bsize", F.count(F.lit(1)).over(w_bucket)).filter(
-        F.col("bsize") <= MAX_BAND_BUCKET
-    ).drop("bsize")
-    # the band frame feeds BOTH sides of the candidate self-join; without a
-    # barrier each side re-runs the whole signature DAG (normalize +
-    # shingle + one md5 per shingle — the pipeline's measured-expensive
-    # step). The frame is (doc_id, band_idx, band_hash) — LSH_BANDS rows
-    # per doc, far smaller than the corpus — so materialize it once.
-    bands = bands.localCheckpoint(eager=True)
-    a = bands.withColumnsRenamed({"doc_id": "doc_a"})
-    b = bands.withColumnsRenamed({"doc_id": "doc_b"})
-    cands = (
-        a.join(b, ["band_idx", "band_hash"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-        # consumed by the id semi-join below AND the verify join — one
-        # barrier on the near-dup-bounded pair list keeps the band join
-        # single-shot (same pattern as incremental_dedup_batch)
-        .localCheckpoint(eager=True)
+    candidate pairs. It is :func:`incremental_dedup_batch` with an EMPTY
+    index: every document is in the increment, so the combined-bucket
+    valve is the full-corpus valve and the orientation filter reduces to
+    ``doc_a < doc_b``."""
+    docs = ctx.source("documents")
+    n_parts = _doc_parallelism(ctx)
+    # the one materialized band frame is the whole increment, and its
+    # .limit(0) is the empty index with the band schema
+    bands = lsh_band_rows(docs, n_parts).localCheckpoint(eager=True)
+    verified, _ = incremental_dedup_batch(
+        docs, bands.limit(0), docs, n_parts, inc_bands=bands
     )
-    # verify with JVM-side array_intersect over the shingle-set arrays: two
-    # hash joins on doc ids, zero explode shuffles — the candidate list is
-    # tiny next to the corpus, so this stage stays cheap at scale.
-    # Shingle ONLY candidate partners (semi-join on the candidate ids):
-    # re-normalizing + re-shingling the ENTIRE corpus for a candidate set
-    # touching a handful of docs was the single biggest cost of this query
-    # (the same round-9 finding that shaped incremental_dedup_batch).
-    cand_ids = (
-        cands.select(F.col("doc_a").alias("doc_id"))
-        .unionByName(cands.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
-    )
-    toks = shingle_sets(
-        ctx.source("documents").join(cand_ids, "doc_id", "leftsemi"),
-        _doc_parallelism(ctx),
-    )
-    ta = toks.select(F.col("doc_id").alias("doc_a"), F.col("words").alias("words_a"))
-    tb = toks.select(F.col("doc_id").alias("doc_b"), F.col("words").alias("words_b"))
-    joined = cands.join(ta, "doc_a").join(tb, "doc_b")
-    inter = F.size(F.array_intersect("words_a", "words_b")).cast("long")
-    union = (F.size("words_a") + F.size("words_b")).cast("long") - inter
-    jac = inter.cast("double") / union
-    return (
-        joined.select(
-            "doc_a",
-            "doc_b",
-            inter.alias("intersection_size"),
-            union.alias("union_size"),
-            rnd(jac, 6).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
-    )
+    return verified.withColumnsRenamed(
+        {"doc_inc": "doc_a", "doc_other": "doc_b"}
+    ).drop("match_scope")
 
 
 oracle(
@@ -460,64 +415,29 @@ def dedup_minhash_incremental(ctx):
     new documents are deduped against the EXISTING corpus (and each
     other) without ever re-pairing history against itself. The corpus is
     split deterministically (doc_id % INC_MOD == 0 = today's increment,
-    rest = history); the LSH probe side holds ONLY increment band rows,
-    so candidate generation is O(increment x bucket), not O(corpus^2) —
-    history-history pairs are structurally impossible. In deployment the
-    history band table is the persisted signature index (a TxnTable
-    appended per batch); here both sides derive from one corpus scan so
-    the DuckDB oracle can replay it exactly.
+    rest = history) and handed to :func:`incremental_dedup_batch` with
+    the history's band rows as the index — in deployment that index is
+    the persisted signature table (a TxnTable appended per batch); here
+    it derives from the same corpus so the DuckDB oracle can replay it.
+    Candidate generation is O(increment x bucket): history-history pairs
+    are structurally impossible, and only candidate partners are
+    shingled for the verify.
 
     Output: verified (Jaccard >= threshold) pairs anchored on the
     increment doc, labeled ``match_scope`` = 'vs_history' (near-dup of an
     existing doc -> drop the new one) or 'within_increment' (new-batch
-    internal dup). Same signature/band/valve/verify conventions as
-    dedup_minhash_lsh (shared via lsh_band_rows)."""
-    from pyspark.sql import Window
-
-    bands = lsh_band_rows(ctx.source("documents"), _doc_parallelism(ctx))
-    w_bucket = Window.partitionBy("band_idx", "band_hash")
-    bands = bands.withColumn(
-        "bsize", F.count(F.lit(1)).over(w_bucket)
-    ).filter(F.col("bsize") <= MAX_BAND_BUCKET).drop("bsize")
-    inc = bands.filter(F.col("doc_id") % INC_MOD == 0).withColumnsRenamed(
-        {"doc_id": "doc_inc"}
+    internal dup). The valve counts the combined (index + increment)
+    bucket, i.e. every band row of the corpus."""
+    docs = ctx.source("documents")
+    n_parts = _doc_parallelism(ctx)
+    is_inc = F.col("doc_id") % INC_MOD == 0
+    verified, _ = incremental_dedup_batch(
+        docs.filter(is_inc),
+        lsh_band_rows(docs.filter(~is_inc), n_parts),
+        docs,
+        n_parts,
     )
-    allb = bands.withColumnsRenamed({"doc_id": "doc_other"})
-    other_is_history = F.col("doc_other") % INC_MOD != 0
-    cands = (
-        inc.join(allb, ["band_idx", "band_hash"])
-        .filter(
-            (F.col("doc_inc") != F.col("doc_other"))
-            # inc-inc pairs once (orientation); inc-history pairs always
-            & (other_is_history | (F.col("doc_inc") < F.col("doc_other")))
-        )
-        .select("doc_inc", "doc_other")
-        .distinct()
-    )
-    toks = _shingle3_set_df(ctx)
-    ta = toks.select(
-        F.col("doc_id").alias("doc_inc"), F.col("words").alias("words_a")
-    )
-    tb = toks.select(
-        F.col("doc_id").alias("doc_other"), F.col("words").alias("words_b")
-    )
-    joined = cands.join(ta, "doc_inc").join(tb, "doc_other")
-    inter = F.size(F.array_intersect("words_a", "words_b")).cast("long")
-    union = (F.size("words_a") + F.size("words_b")).cast("long") - inter
-    jac = inter.cast("double") / union
-    return (
-        joined.select(
-            "doc_inc",
-            "doc_other",
-            F.when(other_is_history, "vs_history")
-            .otherwise("within_increment")
-            .alias("match_scope"),
-            inter.alias("intersection_size"),
-            union.alias("union_size"),
-            rnd(jac, 6).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
-    )
+    return verified
 
 
 oracle(
@@ -577,46 +497,48 @@ WHERE jaccard >= {JACCARD_THRESHOLD}""",
 
 
 # --------------------------------------------------------------------------
-# production multi-batch incremental-dedup API (VERDICT r8 #5)
+# the MinHash-LSH core: signatures -> bands -> hot-bucket valve -> band join
+# -> exact-Jaccard verify
 #
-# ``dedup_minhash_incremental`` above derives history and increment from ONE
-# corpus scan so the DuckDB oracle can replay it.  In deployment the history
-# side is a PERSISTED signature index — a TxnTable of band rows appended per
-# ingest batch.  These helpers are that deployment shape: per batch, compute
-# the increment's band rows, probe them against (persisted index ∪ increment),
-# verify candidates, and hand back the band rows to append.  Candidates stay
-# O(increment × bucket); history–history pairs are structurally impossible.
-# The across-commit completeness invariant (union of per-batch verified pairs
-# == full-LSH pair set on the final corpus) is pinned in
+# ``incremental_dedup_batch`` is the one filter-and-verify pipeline: per
+# batch it computes the increment's band rows, probes them against (index ∪
+# increment), verifies candidates, and hands back the band rows to append.
+# ``dedup_minhash_lsh`` calls it with an empty index, ``dedup_minhash_incremental``
+# with the history split as the index, and ``dedup_multibatch_txn`` with a
+# persisted TxnTable index. Candidates stay O(increment × bucket);
+# history–history pairs are structurally impossible. The across-commit
+# completeness invariant (union of per-batch verified pairs == full-LSH pair
+# set on the final corpus) is pinned in
 # tests/test_operator_invariants.py::test_incremental_dedup_multibatch_txn.
+# Every MinHash signature on the Spark side is built by ``minhash_sig_rows``.
 # --------------------------------------------------------------------------
 
 
-def minhash_sig_rows(docs_df, n_parts: int = 32):
-    """``(doc_id, mh0..mh{K-1})`` full MinHash signatures for a raw
-    documents frame — the shared feedstock of the band split
-    (:func:`lsh_band_rows`) and the b-bit compaction
-    (:func:`dedup_bbit_minhash`). Same 3-gram-shingle / Carter-Wegman
-    conventions as ``dedup_minhash_lsh``."""
+def shingle_sets(docs_df, n_parts: int = 32):
+    """``(doc_id, words)`` distinct 3-gram shingle sets — the MinHash
+    feedstock and the exact-verify operand. The tokens materialize behind
+    the repartition (the CollapseProject hazard, see :func:`tokens_df`)."""
     toks = docs_df.select(
         "doc_id", F.split(norm_text_col(), " ").alias("toks")
     ).repartition(n_parts, "doc_id")
+    return toks.select("doc_id", shingle_col(3).alias("words"))
+
+
+def minhash_sig_rows(docs_df, n_parts: int = 32):
+    """``(doc_id, words, mh0..mh{K-1})`` full MinHash signatures (3-gram
+    shingles, one md5 per shingle, Carter-Wegman K-minhash) for a raw
+    documents frame. ``words`` rides along for consumers that verify or
+    persist the shingle set; Catalyst prunes it wherever it is unused."""
     return (
-        toks.select("doc_id", shingle_col(3).alias("words"))
-        .selectExpr("doc_id", "transform(words, w -> md5(w)) AS hs")
-        .selectExpr("doc_id", f"{hashpair_spark()} AS hp")
-        .selectExpr("doc_id", *minhash_exprs())
+        shingle_sets(docs_df, n_parts)
+        .selectExpr("doc_id", "words", "transform(words, w -> md5(w)) AS hs")
+        .selectExpr("doc_id", "words", f"{hashpair_spark()} AS hp")
+        .selectExpr("doc_id", "words", *minhash_exprs())
     )
 
 
-def lsh_band_rows(docs_df, n_parts: int = 32):
-    """``(doc_id, band_idx, band_hash)`` LSH band rows for a raw documents
-    frame — the payload the incremental index persists per ingest batch.
-    Same signature conventions (3-gram shingles, MinHash K, band split) as
-    ``dedup_minhash_lsh``."""
-    sigs = minhash_sig_rows(docs_df, n_parts).selectExpr(
-        "doc_id", *band_exprs()
-    )
+def _explode_bands(sigs):
+    """``(doc_id, band0..)`` -> ``(doc_id, band_idx, band_hash)`` rows."""
     return sigs.select(
         "doc_id",
         F.posexplode(
@@ -625,13 +547,12 @@ def lsh_band_rows(docs_df, n_parts: int = 32):
     )
 
 
-def shingle_sets(docs_df, n_parts: int = 32):
-    """``(doc_id, words)`` distinct 3-gram shingle sets — the exact-verify
-    feedstock for candidates produced by :func:`incremental_dedup_batch`."""
-    toks = docs_df.select(
-        "doc_id", F.split(norm_text_col(), " ").alias("toks")
-    ).repartition(n_parts, "doc_id")
-    return toks.select("doc_id", shingle_col(3).alias("words"))
+def lsh_band_rows(docs_df, n_parts: int = 32):
+    """``(doc_id, band_idx, band_hash)`` LSH band rows for a raw documents
+    frame — the payload the incremental index persists per ingest batch."""
+    return _explode_bands(
+        minhash_sig_rows(docs_df, n_parts).selectExpr("doc_id", *band_exprs())
+    )
 
 
 def incremental_dedup_batch(increment_docs_df, history_bands_df, all_docs_df,
@@ -649,7 +570,7 @@ def incremental_dedup_batch(increment_docs_df, history_bands_df, all_docs_df,
     match_scope, intersection_size, union_size, jaccard``), and the band
     frame is what the caller appends to the index after the batch commits.
     The hot-bucket valve applies to the COMBINED (index ∪ increment)
-    bucket, mirroring the single-scan model.
+    bucket; with an empty index that is the full-corpus valve.
 
     Valve semantics across batches (round-9 review): the per-batch cost
     bound (≤ MAX_BAND_BUCKET² candidate pairs per bucket) holds
@@ -1015,10 +936,14 @@ def dedup_bbit_minhash(ctx):
         .unionByName(pairs.select(F.col("doc_b").alias("doc_id")))
         .distinct()
     )
-    sigs = minhash_sig_rows(
-        ctx.source("documents").join(pair_ids, "doc_id", "leftsemi"),
-        _doc_parallelism(ctx),
-    ).localCheckpoint(eager=True)
+    sigs = (
+        minhash_sig_rows(
+            ctx.source("documents").join(pair_ids, "doc_id", "leftsemi"),
+            _doc_parallelism(ctx),
+        )
+        .drop("words")
+        .localCheckpoint(eager=True)
+    )
     sa = sigs.select(
         F.col("doc_id").alias("doc_a"),
         *[F.col(f"mh{i}").alias(f"ma{i}") for i in range(MINHASH_K)],
@@ -2169,41 +2094,6 @@ GROUP BY 1, 2""",
 INGEST_MOD = 5
 
 
-def _shingle3_cols(df):
-    """(doc_id, text, ...) -> (doc_id, words): distinct 3-gram shingles.
-    Tokens materialize behind a repartition barrier (same CollapseProject
-    hazard as tokens_df; this variant takes a raw frame so the streaming
-    ingest twin can use it on micro-batches)."""
-    base = df.select(
-        "doc_id", F.split(norm_text_col(), " ").alias("toks")
-    ).repartition(F.col("doc_id"))
-    return base.select("doc_id", shingle_col(3).alias("words"))
-
-
-def banded_signatures(docs):
-    """(doc_id, text, ...) -> the persisted banded signature table
-    (doc_id, words, band0..band{n}): the artifact a deployment keeps as
-    its standing dedup index. Materialized eagerly — every consumer
-    (probe, valve, verify) reads the checkpoint, not the pipeline."""
-    return (
-        _shingle3_cols(docs)
-        .selectExpr("doc_id", "words", "transform(words, w -> md5(w)) AS hs")
-        .selectExpr("doc_id", "words", f"{hashpair_spark()} AS hp")
-        .selectExpr("doc_id", "words", *minhash_exprs())
-        .selectExpr("doc_id", "words", *band_exprs())
-        .localCheckpoint(eager=True)
-    )
-
-
-def _explode_bands(sigs):
-    return sigs.select(
-        "doc_id",
-        F.posexplode(
-            F.array(*[F.col(f"band{b}") for b in range(LSH_BANDS)])
-        ).alias("band_idx", "band_hash"),
-    )
-
-
 def ingest_verdicts(incoming_docs, index_docs):
     """The incremental-ingest dedup core, shared by the batch model and
     the streaming foreachBatch twin (tests/test_streaming_ingest.py):
@@ -2211,11 +2101,30 @@ def ingest_verdicts(incoming_docs, index_docs):
     candidates by exact Jaccard, and emit one deterministic verdict row
     per incoming document. Verdicts depend only on the document itself
     and the index, so any partitioning of the incoming set into
-    micro-batches yields the same union of verdicts."""
+    micro-batches yields the same union of verdicts.
+
+    Not routed through :func:`incremental_dedup_batch`: here the valve
+    counts the INDEX bucket only (the standing side that can degenerate),
+    the core counts the combined bucket. The two differ once incoming docs
+    push an index bucket over MAX_BAND_BUCKET (pinned in
+    tests/test_operator_invariants.py::
+    test_lsh_hot_bucket_valve_drops_degenerate_buckets)."""
     from pyspark.sql import Window
 
-    in_sigs = banded_signatures(incoming_docs)
-    ix_sigs = banded_signatures(index_docs)
+    n_parts = incoming_docs.sparkSession.sparkContext.defaultParallelism
+
+    def banded(docs):
+        # the persisted signature table (doc_id, words, band*) a deployment
+        # keeps as its standing index: every consumer (probe, valve,
+        # verify) reads the checkpoint, not the pipeline
+        return (
+            minhash_sig_rows(docs, n_parts)
+            .selectExpr("doc_id", "words", *band_exprs())
+            .localCheckpoint(eager=True)
+        )
+
+    in_sigs = banded(incoming_docs)
+    ix_sigs = banded(index_docs)
     w_bucket = Window.partitionBy("band_idx", "band_hash")
     idx = (
         _explode_bands(ix_sigs)
@@ -2688,10 +2597,8 @@ def minhash_estimate_error(ctx):
     # a deployment persists it); both pair sides read the checkpoint
     # instead of re-running the hash pipeline
     sigs = (
-        _shingle3_set_df(ctx)
-        .selectExpr("doc_id", "transform(words, w -> md5(w)) AS hs")
-        .selectExpr("doc_id", f"{hashpair_spark()} AS hp")
-        .selectExpr("doc_id", *minhash_exprs())
+        minhash_sig_rows(ctx.source("documents"), _doc_parallelism(ctx))
+        .drop("words")
         .localCheckpoint(eager=True)
     )
     sa = sigs.select(

@@ -35,11 +35,10 @@ from dbt_tpch_spark.models.oracle import isum_sql, oracle, rnd_sql
 from dbt_tpch_spark.operators.dedup import (
     _SHINGLE3_DUCK,
     MINHASH_K,
-    _shingle3_set_df,
+    _doc_parallelism,
     hashpair_duck,
-    hashpair_spark,
-    minhash_exprs,
     minhash_exprs_duck,
+    minhash_sig_rows,
 )
 from dbt_tpch_spark.plans import model
 
@@ -83,12 +82,7 @@ def lsh_band_collision_stats(ctx):
     signatures: bucket counts, colliding buckets, exact candidate-pair
     workload Σ C(cnt, 2), max bucket, and the analytic half-recall
     threshold s* = (1 - 0.5^(1/b))^(1/r)."""
-    sigs = (
-        _shingle3_set_df(ctx)
-        .selectExpr("doc_id", "transform(words, w -> md5(w)) AS hs")
-        .selectExpr("doc_id", f"{hashpair_spark()} AS hp")
-        .selectExpr("doc_id", *minhash_exprs())
-    )
+    sigs = minhash_sig_rows(ctx.source("documents"), _doc_parallelism(ctx))
     flat = sigs.selectExpr(
         "doc_id", f"explode({_struct_entries_spark()}) AS e"
     ).select(

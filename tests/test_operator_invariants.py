@@ -1889,7 +1889,9 @@ def test_lsh_hot_bucket_valve_drops_degenerate_buckets(spark, sf_dir, tmp_path):
     candidates) plus one genuine near-dup pair in healthy buckets. The
     valve must drop ALL degenerate-bucket pairs (exact dedup is the right
     tool for identical docs) while the healthy pair is still found — on
-    BOTH engines, and on the incremental path's combined-bucket valve."""
+    BOTH engines, and on the incremental path's combined-bucket valve.
+    The ingest path's valve counts only the index side, so there the hot
+    bucket stays open: both semantics are pinned against their oracles."""
     import pandas as pd
 
     import dbt_tpch_spark.operators.dedup as dd
@@ -1929,13 +1931,24 @@ def test_lsh_hot_bucket_valve_drops_degenerate_buckets(spark, sf_dir, tmp_path):
     assert inc_pairs == {(pair_ids[1], pair_ids[0], "vs_history")}, inc_pairs
     import __spark_entry__ as entrymod
 
-    rep = check_query(
-        spark,
-        d,
-        entrymod.queries()["dedup_minhash_lsh"],
-        entrymod.oracle_sql()["dedup_minhash_lsh"],
-    )
-    assert rep["rows_match"] and rep["cols_match"] and rep["values_match"]
+    for name in (
+        "dedup_minhash_lsh",
+        "dedup_minhash_incremental",
+        "dedup_incremental_ingest",
+    ):
+        rep = check_query(
+            spark, d, entrymod.queries()[name], entrymod.oracle_sql()[name]
+        )
+        assert rep["rows_match"] and rep["cols_match"] and rep["values_match"], name
+    # the ingest valve counts the INDEX bucket only: the 840 hot index docs
+    # stay under MAX_BAND_BUCKET (the combined 1050-doc bucket trips it), so
+    # every hot incoming doc matches every hot index doc
+    ingest = Context(spark, d).ref("dedup_incremental_ingest").collect()
+    hot_new = [r for r in ingest if r["doc_new"] <= n_hot]
+    n_hot_index = n_hot - len(hot_new)
+    assert len(hot_new) == n_hot // dd.INGEST_MOD
+    assert n_hot_index <= dd.MAX_BAND_BUCKET < n_hot
+    assert {r["n_dup_matches"] for r in hot_new} == {n_hot_index}
 
 
 def test_emb_hot_bucket_valve_drops_degenerate_buckets(spark, sf_dir, tmp_path):

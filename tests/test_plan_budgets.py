@@ -60,8 +60,10 @@ SHUFFLE_BUDGETS = {
     # JSON schema census: map-entries explode + key agg + 1-row total
     "events_props_schema": 2,
     "monthly_revenue_kpis": 4,
+    # the MinHash-LSH core (incremental_dedup_batch) with an empty index
     "dedup_minhash_lsh": 7,
-    # same DAG with the probe side filtered to the increment split
+    # the same core with the history split's band rows as the index
+    # (measured 6)
     "dedup_minhash_incremental": 7,
     # census over the checkpointed pair table (3 consumers, built once)
     "dedup_incremental_census": 7,
@@ -69,7 +71,8 @@ SHUFFLE_BUDGETS = {
     # (the band joins run as side jobs); the query plan is a union of
     # checkpointed scans — 0 visible exchanges
     "dedup_multibatch_txn": 0,
-    # LSH pair DAG (7) + signature projection repartition + 2 sig joins
+    # the LSH pair list and the pair docs' signatures are both
+    # checkpointed; the query plan joins two checkpointed scans (measured 0)
     "dedup_bbit_minhash": 10,
     # first-event agg + (user, week) distinct + user join + triangle agg
     "events_retention_triangle": 5,
