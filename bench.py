@@ -264,6 +264,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
 
+    from dbt_tpch_spark.functions import release_barriers
     from dbt_tpch_spark.plans import MODELS, Context, import_all_models
     from dbt_tpch_spark.session import get_spark
 
@@ -331,6 +332,9 @@ def main() -> None:
                 if q_proc is not None and proc_after is not None:
                     proc_cpu_secs[name] = round(proc_after - q_proc, 3)
             cpu_before = cpu_after
+            # the query is acted on and measured: free its barrier blocks
+            # so they do not crowd the next query's executor memory
+            release_barriers(spark)
 
         # full-DAG warehouse build: the engine analogue of the reference's
         # headline number (`dbt build`, all models, threads=4 —

@@ -25,6 +25,8 @@ engines for identical operands. Money values themselves are rounded once to
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -55,6 +57,54 @@ def gated_broadcast(df, n_rows: int):
     if n_rows <= _self.BROADCAST_STATE_MAX_ROWS:
         return F.broadcast(df)
     return df.hint("shuffle_hash")
+
+
+#: JVM RDD ids of the checkpoints :func:`barrier` took that
+#: :func:`release_barriers` has not freed yet.  Ints only: holding the
+#: frames would pin every barrier's blocks in a session that never
+#: releases.  Build lanes and the dedup multibatch pool take barriers from
+#: worker threads, hence the lock.
+_BARRIER_RDD_IDS: set[int] = set()
+_BARRIER_LOCK = threading.Lock()
+
+
+def barrier(df, eager: bool = True, bounded: bool = False):
+    """Cut ``df``'s plan at a ``localCheckpoint``: the engine's one plan
+    barrier.  ``eager`` materializes the blocks now (one job); a lazy
+    barrier materializes on the first action that reads it.  ``bounded``
+    registers the result as SF-independent for the pair-stage audit
+    (:func:`dbt_tpch_spark.plans.audit.mark_bounded`), because the
+    checkpoint erases the plan that proved it.  The checkpoint's RDD id
+    is recorded so :func:`release_barriers` can free its blocks once the
+    query that reads them is done."""
+    out = df.localCheckpoint(eager=eager)
+    if bounded:
+        from dbt_tpch_spark.plans.audit import mark_bounded
+
+        mark_bounded(out)
+    rdd_id = out._jdf.queryExecution().logical().rdd().id()
+    with _BARRIER_LOCK:
+        _BARRIER_RDD_IDS.add(rdd_id)
+    return out
+
+
+def release_barriers(spark) -> None:
+    """Unpersist every recorded barrier's blocks that the session still
+    holds, and forget the recorded ids (here and in the pair-stage audit's
+    bounded registry).  Call it only after the last action on every frame
+    built over those barriers: a released local checkpoint cannot be
+    recomputed."""
+    from dbt_tpch_spark.plans import audit
+
+    with _BARRIER_LOCK:
+        ids = set(_BARRIER_RDD_IDS)
+        _BARRIER_RDD_IDS.clear()
+    persistent = spark.sparkContext._jsc.getPersistentRDDs()
+    for rdd_id in ids:
+        rdd = persistent.get(rdd_id)
+        if rdd is not None:
+            rdd.unpersist(True)
+    audit._BOUNDED_RDD_IDS.difference_update(ids)
 
 
 def money(col: Column) -> Column:
@@ -330,7 +380,7 @@ def bucketed_windows(
     # lazy checkpoint: the quantile sketch's head() below is the first
     # action and materializes it — fusing the checkpoint write into a pass
     # that must run anyway (eager=True would add a separate blocking pass)
-    df = df.localCheckpoint(eager=False)
+    df = barrier(df, eager=False)
     part = list(partition_cols)
     sum_col = running_sum[0] if running_sum else (grand_sum[0] if grand_sum else None)
     if grand_sum and running_sum and grand_sum[0] != running_sum[0]:
@@ -457,7 +507,7 @@ def global_ntiles(df, n, specs, n_buckets: int = 32):
     not a data-sized collect."""
     from pyspark.sql.window import Window
 
-    df = df.localCheckpoint(eager=False)
+    df = barrier(df, eager=False)
     probs = [i / n_buckets for i in range(1, n_buckets)]
     sketch = df.agg(
         *[

@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from dbt_tpch_spark.functions import (
+    barrier,
     davg,
     days_between,
     dsum,
@@ -351,7 +352,7 @@ def int_market_basket(ctx):
         .select("order_key", "part_key")
         .groupBy("order_key")
         .agg(F.sort_array(F.collect_set("part_key")).alias("ps"))
-        .localCheckpoint(eager=True)
+        .transform(barrier)
     )
     pairs = (
         explode_sorted_pairs(baskets, "ps", "part_a", "part_b")

@@ -7,6 +7,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from dbt_tpch_spark.functions import (
+    barrier,
     bucketed_windows,
     davg,
     days_between,
@@ -670,7 +671,7 @@ def customer_rfm_segments(ctx):
     # over the facts == max(per-customer max) over om (every fact row
     # belongs to exactly one customer group), so derive it from om behind
     # a lazy barrier: one chain build feeds both consumers.
-    om = om.localCheckpoint(eager=False)
+    om = barrier(om, eager=False)
     ref = om.agg(F.max("last_order_date").alias("reference_date"))
     scored = (
         om.crossJoin(F.broadcast(ref))

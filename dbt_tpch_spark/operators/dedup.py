@@ -23,7 +23,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from dbt_tpch_spark.functions import dsum, rnd
+from dbt_tpch_spark.functions import barrier, dsum, rnd
 from dbt_tpch_spark.plans import model
 from dbt_tpch_spark.models.oracle import dsum_sql, oracle, rnd_sql
 
@@ -345,7 +345,7 @@ def dedup_minhash_lsh(ctx):
     n_parts = _doc_parallelism(ctx)
     # the one materialized band frame is the whole increment, and its
     # .limit(0) is the empty index with the band schema
-    bands = lsh_band_rows(docs, n_parts).localCheckpoint(eager=True)
+    bands = barrier(lsh_band_rows(docs, n_parts))
     verified, _ = incremental_dedup_batch(
         docs, bands.limit(0), docs, n_parts, inc_bands=bands
     )
@@ -604,9 +604,7 @@ def incremental_dedup_batch(increment_docs_df, history_bands_df, all_docs_df,
     # computed concurrently (guide §2.6) — the band frame depends only on
     # the increment, never on the index.
     if inc_bands is None:
-        inc_bands = lsh_band_rows(increment_docs_df, n_parts).localCheckpoint(
-            eager=True
-        )
+        inc_bands = barrier(lsh_band_rows(increment_docs_df, n_parts))
     # membership travels as a literal column through the union — zero
     # joins, so the probe restriction costs nothing at any batch size
     all_bands = (
@@ -642,7 +640,7 @@ def incremental_dedup_batch(increment_docs_df, history_bands_df, all_docs_df,
     # the candidate set is small (O(increment x bucket)) but feeds THREE
     # consumers (the id semi-join + both verify joins) — checkpoint it so
     # the band join runs once per batch
-    cands = cands.localCheckpoint(eager=True)
+    cands = barrier(cands)
     # shingle ONLY candidate partners: without the semi-join every batch
     # would re-normalize + re-shingle the ENTIRE document store (the
     # pipeline's measured-expensive step — see tokens_df) for a candidate
@@ -695,7 +693,7 @@ def dedup_incremental_census(ctx):
     # three consumers (history-dup probe + both sides of the within union)
     # would each rebuild the whole signature DAG — materialize the verified
     # pair table once (it is tiny next to the corpus: near-dup pairs only)
-    pairs = ctx.ref("dedup_minhash_incremental").localCheckpoint(eager=True)
+    pairs = barrier(ctx.ref("dedup_minhash_incremental"))
     hist_dup = (
         pairs.filter(F.col("match_scope") == "vs_history")
         .select(F.col("doc_inc").alias("doc_id"))
@@ -824,11 +822,7 @@ def dedup_multibatch_txn(ctx):
         with ThreadPoolExecutor(max_workers=3) as pool:
             batches = [docs.filter(F.col("doc_id") % 3 == k) for k in range(3)]
             band_futs = [
-                pool.submit(
-                    lambda b=b: lsh_band_rows(b, n_parts).localCheckpoint(
-                        eager=True
-                    )
-                )
+                pool.submit(lambda b=b: barrier(lsh_band_rows(b, n_parts)))
                 for b in batches
             ]
             verify_futs = []
@@ -849,7 +843,7 @@ def dedup_multibatch_txn(ctx):
                     pool.submit(
                         lambda v=verified, k=k: v.withColumn(
                             "batch", F.lit(k)
-                        ).localCheckpoint(eager=True)
+                        ).transform(barrier)
                     )
                 )
                 if table is None:
@@ -929,7 +923,7 @@ def dedup_bbit_minhash(ctx):
     pairs = (
         ctx.ref("dedup_minhash_lsh")
         .select("doc_a", "doc_b", "jaccard")
-        .localCheckpoint(eager=True)
+        .transform(barrier)
     )
     pair_ids = (
         pairs.select(F.col("doc_a").alias("doc_id"))
@@ -942,7 +936,7 @@ def dedup_bbit_minhash(ctx):
             _doc_parallelism(ctx),
         )
         .drop("words")
-        .localCheckpoint(eager=True)
+        .transform(barrier)
     )
     sa = sigs.select(
         F.col("doc_id").alias("doc_a"),
@@ -1399,7 +1393,7 @@ def dedup_embedding_cosine(ctx):
         F.expr(DOT_SPARK.format(a="embedding", b="embedding")).alias(
             "norm_sq"
         ),
-    ).localCheckpoint(eager=True)
+    ).transform(barrier)
     # the checkpoint erased norms' size stats, so the verify joins below
     # would default to sort-merge (two full sorts of the candidate set);
     # gate on the MEASURED row count — broadcast when vector-table-sized,
@@ -1475,7 +1469,7 @@ def dedup_embedding_cosine(ctx):
         cands.join(gated_broadcast(na, n_vecs), "vec_a")
         .join(gated_broadcast(nb, n_vecs), "vec_b")
         .select("vec_a", "vec_b", rnd(cos, 6).alias("cosine"))
-        .localCheckpoint(eager=True)
+        .transform(barrier)
     )
     return scored.filter(F.col("cosine") >= COSINE_THRESHOLD)
 
@@ -1568,26 +1562,26 @@ def dedup_embedding_lsh_recall(ctx):
     because the verify stage is exact)."""
     from pyspark.sql import Window
 
-    from dbt_tpch_spark.plans.audit import bounded_checkpoint
-
     e = ctx.source("embeddings")
     skey = F.md5(
         F.concat(F.lit(_EMB_RECALL_SALT), F.col("vec_id").cast("string"))
     )
-    sampled = bounded_checkpoint(
+    sampled = barrier(
         e.select("vec_id", "embedding", skey.alias("skey"))
         .orderBy("skey")
         .limit(EMB_RECALL_SAMPLE)
-        .repartition(_doc_parallelism(ctx), "vec_id")
+        .repartition(_doc_parallelism(ctx), "vec_id"),
+        bounded=True,
     )
-    norms = bounded_checkpoint(
+    norms = barrier(
         sampled.select(
             "vec_id",
             F.col("embedding").alias("emb"),
             F.expr(DOT_SPARK.format(a="embedding", b="embedding")).alias(
                 "norm_sq"
             ),
-        )
+        ),
+        bounded=True,
     )
     a = norms.select(
         F.col("vec_id").alias("vec_a"),
@@ -1605,7 +1599,7 @@ def dedup_embedding_lsh_recall(ctx):
     truth = (
         a.join(b, F.col("vec_a") < F.col("vec_b"))
         .select("vec_a", "vec_b", rnd(cos, 6).alias("cosine"))
-        .localCheckpoint(eager=True)
+        .transform(barrier)
         .filter(F.col("cosine") >= COSINE_THRESHOLD)
     )
     bands = sampled.selectExpr(
@@ -1878,7 +1872,7 @@ def _component_labels(ctx):
         edges.select(F.col("doc_a").alias("doc_id"))
         .distinct()
         .withColumn("cluster_id", F.col("doc_id"))
-        .localCheckpoint(eager=True)
+        .transform(barrier)
     )
     max_rounds = 16  # >> any realistic near-dup component diameter
     for _ in range(max_rounds):
@@ -1896,7 +1890,7 @@ def _component_labels(ctx):
                     F.coalesce(F.col("nbr_min"), F.col("cluster_id")),
                 ).alias("cluster_id"),
             )
-            .localCheckpoint(eager=True)
+            .transform(barrier)
         )
         changed = (
             new_labels.alias("n")
@@ -2120,7 +2114,7 @@ def ingest_verdicts(incoming_docs, index_docs):
         return (
             minhash_sig_rows(docs, n_parts)
             .selectExpr("doc_id", "words", *band_exprs())
-            .localCheckpoint(eager=True)
+            .transform(barrier)
         )
 
     in_sigs = banded(incoming_docs)
@@ -2378,7 +2372,7 @@ def dedup_method_agreement(ctx):
     # three downstream consumers (census + both self-join sides) would each
     # re-execute all three detector pipelines; the labeled pair set is tiny
     # (pair-cardinality), so materialize it once
-    labeled = labeled.localCheckpoint(eager=True)
+    labeled = barrier(labeled)
     per_method = labeled.groupBy("method").agg(
         F.count(F.lit(1)).cast("long").alias("n_pairs")
     )
@@ -2599,7 +2593,7 @@ def minhash_estimate_error(ctx):
     sigs = (
         minhash_sig_rows(ctx.source("documents"), _doc_parallelism(ctx))
         .drop("words")
-        .localCheckpoint(eager=True)
+        .transform(barrier)
     )
     sa = sigs.select(
         F.col("doc_id").alias("doc_a"),
@@ -2847,15 +2841,14 @@ def docs_crosslingual_dup_census(ctx):
             F.greatest("lang_a", "lang_b").alias("lang_hi"),
         )
     )
-    from dbt_tpch_spark.plans.audit import bounded_checkpoint
-
     # the census is <=|lang|^2 rows but feeds TWO consumers (rows + the
     # share denominator) — checkpoint so the LSH pipeline runs once
-    census = bounded_checkpoint(
+    census = barrier(
         tagged.groupBy("lang_lo", "lang_hi").agg(
             F.count(F.lit(1)).cast("long").alias("n_pairs")
         ),
         eager=False,
+        bounded=True,
     )
     total = census.agg(F.sum("n_pairs").cast("double").alias("t"))
     return (

@@ -36,7 +36,13 @@ from pyspark.sql import functions as F
 
 from dbt_tpch_spark.models.oracle import oracle, rnd_sql
 from dbt_tpch_spark.plans import model
-from dbt_tpch_spark.functions import explode_sorted_pairs, global_row_number, rnd
+from dbt_tpch_spark.functions import (
+    barrier,
+    explode_sorted_pairs,
+    gated_broadcast,
+    global_row_number,
+    rnd,
+)
 
 DAMPING = 0.85
 TELEPORT = 0.15  # 1 - DAMPING, kept as an exact literal on both engines
@@ -105,37 +111,14 @@ def _edges(ctx, n_part: int | None = None):
     )
 
 
-#: above this node count the per-round rank state stops being broadcast
-#: (at SF1000 that's ~200M rows/round — a driver/executor memory killer)
-#: and the co-partitioned path takes over; tests force it to 0 to pin the
-#: large-graph plan shape.
-BROADCAST_STATE_MAX_NODES = 1_000_000
-
-
-def _node_state(n_nodes: int):
-    """State-join strategy for node-cardinality frames, gated on the
-    measured node count: broadcast below BROADCAST_STATE_MAX_NODES,
-    shuffle-hash above it (the node-sized side builds hash tables; the
-    edge side is never sorted).  Every node-grain join in this module
-    routes through this gate — an ungated ``F.broadcast`` of a node-grain
-    frame is the class of scale bug the CI broadcast invariant flags
-    (plans/audit.py:broadcast_hint_offenders)."""
-    broadcast_state = n_nodes <= BROADCAST_STATE_MAX_NODES
-
-    def _state(df):
-        return F.broadcast(df) if broadcast_state else df.hint("shuffle_hash")
-
-    return _state
-
-
 @model("parts_pagerank", layer="operators", materialization="view")
 def parts_pagerank(ctx):
     """PageRank (d=0.85, ITERS fixed rounds, uniform init) over the
     symmetric part co-purchase graph; emits every node's out-degree, final
     rank value, and dense importance rank.
 
-    State-join strategy is node-count-gated: below
-    BROADCAST_STATE_MAX_NODES the node-sized rank vector broadcasts
+    State-join strategy is node-count-gated (functions.gated_broadcast):
+    below BROADCAST_STATE_MAX_ROWS the node-sized rank vector broadcasts
     (zero-shuffle rounds); above it, edges are hash-partitioned ONCE on
     ``src`` and each round joins the state with a shuffle-hash hint — the
     trillion-edge side is never reshuffled or sorted per round, only the
@@ -149,7 +132,6 @@ def parts_pagerank(ctx):
     edges = _edges(ctx, n_part).cache()
     deg = edges.groupBy("src").agg(F.count("*").cast("long").alias("outdeg"))
     n_nodes = deg.count()
-    _state = _node_state(n_nodes)
 
     pr = (
         deg.withColumn("n", F.lit(float(n_nodes)))
@@ -159,21 +141,28 @@ def parts_pagerank(ctx):
             "n",
             rnd(F.lit(1.0) / F.col("n"), 12).alias("pr"),
         )
-        .localCheckpoint(eager=True)
+        .transform(barrier)
     )
     for _ in range(ITERS):
         # quantize each node's contribution ONCE on the node-grain state:
         # the oracle's per-edge cast of the same double, so bit-identical
         c = (F.col("pr") / F.col("outdeg")).cast(_PR_DECIMAL).alias("c")
         contrib = (
-            edges.join(_state(pr.select("node", c)), edges.src == F.col("node"))
+            edges.join(
+                gated_broadcast(pr.select("node", c), n_nodes),
+                edges.src == F.col("node"),
+            )
             .groupBy("dst")
             .agg(F.sum("c").cast("double").alias("insum"))
         )
         pr = (
             pr.drop("pr")
             # contrib is node-sized (one row per part, not per edge)
-            .join(_state(contrib), pr.node == contrib.dst, "left")
+            .join(
+                gated_broadcast(contrib, n_nodes),
+                pr.node == contrib.dst,
+                "left",
+            )
             .select(
                 "node",
                 "outdeg",
@@ -184,7 +173,7 @@ def parts_pagerank(ctx):
                     12,
                 ).alias("pr"),
             )
-            .localCheckpoint(eager=True)
+            .transform(barrier)
         )
     # every consumer of the edge cache has materialized (each round's pr is
     # an eager checkpoint) — release the executors' memory now instead of
@@ -278,35 +267,34 @@ def parts_triangle_count(ctx):
     Σ outdeg² ≤ O(m^1.5) for ANY degree distribution — a hub of degree d
     has out-degree O(√m) after orientation, so the deg² blowup the naive
     value-ordered wedge join suffers on skewed graphs cannot happen.
-    Node-grain side frames (degrees, per-node counts) route through the
-    _node_state gate.  Clustering coefficient = 2T / (deg * (deg - 1)),
-    0 when deg < 2."""
-    p = _pairs(ctx).localCheckpoint(eager=True)
+    Node-grain side frames (degrees, per-node counts) route through
+    functions.gated_broadcast on the measured node count.  Clustering
+    coefficient = 2T / (deg * (deg - 1)), 0 when deg < 2."""
+    p = barrier(_pairs(ctx))
     edges = p.unionByName(
         p.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
     deg = (
         edges.groupBy(F.col("src").alias("part_key"))
         .agg(F.count(F.lit(1)).cast("long").alias("degree"))
-        .localCheckpoint(eager=True)
+        .transform(barrier)
     )
     n_nodes = deg.count()
-    _state = _node_state(n_nodes)
     d1 = deg.select(F.col("part_key").alias("src"), F.col("degree").alias("ds"))
     d2 = deg.select(F.col("part_key").alias("dst"), F.col("degree").alias("dd"))
     src_first = (F.col("ds") < F.col("dd")) | (
         (F.col("ds") == F.col("dd")) & (F.col("src") < F.col("dst"))
     )
     oriented = (
-        p.join(_state(d1), "src")
-        .join(_state(d2), "dst")
+        p.join(gated_broadcast(d1, n_nodes), "src")
+        .join(gated_broadcast(d2, n_nodes), "dst")
         .select(
             F.when(src_first, F.col("src")).otherwise(F.col("dst")).alias("u"),
             F.when(src_first, F.col("dst")).otherwise(F.col("src")).alias("v"),
             # carry the head's rank key for the wedge ordering below
             F.when(src_first, F.col("dd")).otherwise(F.col("ds")).alias("dv"),
         )
-        .localCheckpoint(eager=True)
+        .transform(barrier)
     )
     o2 = oriented.withColumnsRenamed({"v": "w", "dv": "dw"})
     wedge = oriented.join(o2, "u").filter(
@@ -322,7 +310,7 @@ def parts_triangle_count(ctx):
     )
     d = F.col("degree").cast("double")
     return (
-        deg.join(_state(per_node), "part_key", "left")
+        deg.join(gated_broadcast(per_node, n_nodes), "part_key", "left")
         .withColumn("n_triangles", F.coalesce(F.col("n_triangles"), F.lit(0)))
         .withColumn(
             "clustering_coeff",
@@ -413,44 +401,52 @@ def parts_kcore(ctx):
     that holds.
 
     Scale: edges are hash-partitioned ONCE on src and cached; every
-    round's alive-set semi-joins broadcast below
-    BROADCAST_STATE_MAX_NODES (node-cardinality state, the PageRank
-    gate) and the per-round degree count is the one edge-shuffle-free
-    aggregate on the cached layout. Fixed rounds keep the oracle an
+    round's alive-set semi-joins go through functions.gated_broadcast on
+    the node count (node-cardinality state, the PageRank gate) and the
+    per-round degree count is the one edge-shuffle-free aggregate on the
+    cached layout. Fixed rounds keep the oracle an
     unrolled CTE chain."""
     n_part = int(ctx.spark.conf.get("spark.sql.shuffle.partitions", "32"))
     edges = _edges(ctx, n_part).cache()
     all_nodes = (
         edges.select(F.col("src").alias("node"))
         .distinct()
-        .localCheckpoint(eager=True)
+        .transform(barrier)
     )
     n_nodes = all_nodes.count()
-    _state = _node_state(n_nodes)
 
-    alive = all_nodes.localCheckpoint(eager=True)
+    def _alive_edges(alive):
+        return edges.join(
+            gated_broadcast(alive.withColumnRenamed("node", "src"), n_nodes),
+            "src",
+        ).join(
+            gated_broadcast(alive.withColumnRenamed("node", "dst"), n_nodes),
+            "dst",
+        )
+
+    alive = all_nodes
     for _ in range(KCORE_ROUNDS):
         deg = (
-            edges.join(_state(alive.withColumnRenamed("node", "src")), "src")
-            .join(_state(alive.withColumnRenamed("node", "dst")), "dst")
+            _alive_edges(alive)
             .groupBy("src")
             .agg(F.count(F.lit(1)).cast("long").alias("d"))
         )
         alive = (
             deg.filter(F.col("d") >= KCORE_K)
             .select(F.col("src").alias("node"))
-            .localCheckpoint(eager=True)
+            .transform(barrier)
         )
     # the core table is the artifact; checkpoint it so the emitted plan is
     # the verdict join, not a re-derivation of the edge pipeline (same
     # shape as PageRank's severed final rank)
     core_deg = (
-        edges.join(_state(alive.withColumnRenamed("node", "src")), "src")
-        .join(_state(alive.withColumnRenamed("node", "dst")), "dst")
+        _alive_edges(alive)
         .groupBy("src")
         .agg(F.count(F.lit(1)).cast("long").alias("core_degree"))
-        .localCheckpoint(eager=True)
+        .transform(barrier)
     )
+    # core_deg is the edge cache's last consumer and is materialized
+    edges.unpersist()
     return (
         all_nodes.join(
             core_deg.withColumnRenamed("src", "node"), "node", "left"
@@ -560,8 +556,8 @@ def parts_neighbor_similarity(ctx):
     hot-node valve drops ultra-hubs from serving as the shared neighbor.
     Per-source top-k is a partitioned rank window (WindowGroupLimit).
     Every node-grain side frame (degree tables, sampled degrees, the hub
-    valve) joins through the _node_state gate — broadcast only below
-    BROADCAST_STATE_MAX_NODES, shuffle-hash above."""
+    valve) joins through functions.gated_broadcast on the node count —
+    broadcast only below BROADCAST_STATE_MAX_ROWS, shuffle-hash above."""
     from pyspark.sql.window import Window
 
     # cache, not localCheckpoint: the cached InMemoryRelation keeps the
@@ -574,7 +570,7 @@ def parts_neighbor_similarity(ctx):
     deg = (
         edges.groupBy(F.col("src").alias("node"))
         .agg(F.count(F.lit(1)).cast("long").alias("degree"))
-        .localCheckpoint(eager=True)
+        .transform(barrier)
     )
     # deterministic per-node neighbor sample (partitioned window — the
     # rank runs inside each node's list, never globally)
@@ -587,12 +583,11 @@ def parts_neighbor_similarity(ctx):
         "dst",
     )
     n_nodes = deg.count()
-    _state = _node_state(n_nodes)
     adj = (
         edges.withColumn("_srk", F.row_number().over(w_s))
         .filter(F.col("_srk") <= NEIGHBOR_SAMPLE_H)
         .drop("_srk")
-        .localCheckpoint(eager=True)
+        .transform(barrier)
     )
     # deg and adj are materialized — the edge cache has no consumer left
     edges.unpersist()
@@ -607,7 +602,7 @@ def parts_neighbor_similarity(ctx):
     hub_ok = deg.filter(F.col("degree") <= NEIGHBOR_DEG_CAP).select(
         F.col("node").alias("dst")
     )
-    adj_w = adj.join(_state(hub_ok), "dst", "left_semi")
+    adj_w = adj.join(gated_broadcast(hub_ok, n_nodes), "dst", "left_semi")
     # Round-12: tried and REVERTED (VERDICT r11 #5) — expanding each
     # unordered wedge in-row from the shared neighbor's sorted src list
     # (collect_list + the _edges/_pairs basket trick, halving emitted
@@ -637,8 +632,8 @@ def parts_neighbor_similarity(ctx):
         {"node": "b", "degree": "deg_b", "sdeg": "sdeg_b"}
     )
     sim = (
-        common.join(_state(nsa), "a")
-        .join(_state(nsb), "b")
+        common.join(gated_broadcast(nsa, n_nodes), "a")
+        .join(gated_broadcast(nsb, n_nodes), "b")
         .withColumn(
             "jaccard_est",
             rnd(
@@ -651,7 +646,7 @@ def parts_neighbor_similarity(ctx):
         # direction union below; without a barrier the whole wedge join +
         # count aggregate (this query's dominant stage) runs TWICE
         # (round-11: the plan carried two complete wedge subtrees)
-        .localCheckpoint(eager=True)
+        .transform(barrier)
     )
     # emit both directions so every part gets its own top-k list
     both = sim.unionByName(
@@ -785,7 +780,7 @@ def parts_degree_assortativity(ctx):
     # or each re-expands the basket-explode pipeline (measured 21 -> 5
     # exchanges); partitioned on src so deg and the src-side join reuse it
     n_part = int(ctx.spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    edges = _edges(ctx, n_part).localCheckpoint(eager=True)
+    edges = barrier(_edges(ctx, n_part))
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).cast("long").alias("deg"))
     da = deg.select(F.col("src").alias("_a"), F.col("deg").alias("da"))
     db = deg.select(F.col("src").alias("_b"), F.col("deg").alias("db"))

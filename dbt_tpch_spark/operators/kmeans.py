@@ -32,9 +32,8 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from dbt_tpch_spark.functions import dsum, global_topk, rnd
+from dbt_tpch_spark.functions import barrier, dsum, global_topk, rnd
 from dbt_tpch_spark.plans import model
-from dbt_tpch_spark.plans.audit import bounded_checkpoint
 from dbt_tpch_spark.models.oracle import dsum_sql, oracle, rnd_sql
 from dbt_tpch_spark.operators.dedup import DOT_SPARK, dot_duck
 from dbt_tpch_spark.operators.similarity import N_QUERIES, TOP_K
@@ -82,21 +81,22 @@ def _fit(ctx):
     """Run ITERS Lloyd's rounds; returns (vectors, final centroids with cc).
     localCheckpoint per round keeps the logical plan shallow (same pattern
     as dedup_clusters)."""
-    v = _vectors(ctx).localCheckpoint(eager=True)
+    v = barrier(_vectors(ctx))
     seeds = ctx.source("embeddings").select(
         "embedding",
         F.md5(F.concat(F.lit(SEED_SALT), F.col("vec_id").cast("string"))).alias("sk"),
     )
     # global_topk: md5-prefix-grouped parallel rank + tiny candidate merge —
     # replaces the old whole-corpus single-partition Window.orderBy("sk")
-    # bounded_checkpoint: the centroid state is K_CELLS rows at any SF —
+    # bounded barrier: the centroid state is K_CELLS rows at any SF —
     # register it so the pair-stage invariant sees the crossJoin as a
     # bounded-grid broadcast, not an all-pairs stage
-    cents = bounded_checkpoint(
+    cents = barrier(
         global_topk(seeds, "sk", K_CELLS, ["embedding"]).select(
             (F.col("rn") - 1).cast("long").alias("cell_id"),
             F.col("embedding").alias("cent"),
-        )
+        ),
+        bounded=True,
     )
     for _ in range(ITERS):
         # argmin as an aggregation, not a rank window: min(struct(d2,
@@ -132,7 +132,7 @@ def _fit(ctx):
         # at ANY corpus size. The explode's shuffle is equally bounded:
         # map-side partial aggregation reduces it to K*DIMS groups per
         # task, so bytes-on-the-wire stay O(K*DIMS*tasks), not O(n).
-        cents = bounded_checkpoint(
+        cents = barrier(
             assigned.select("cell_id", F.posexplode("emb").alias("pos", "val"))
             .groupBy("cell_id", "pos")
             .agg(
@@ -144,7 +144,8 @@ def _fit(ctx):
                     F.sort_array(F.collect_list(F.struct("pos", "m"))),
                     lambda s: s["m"],
                 ).alias("cent")
-            )
+            ),
+            bounded=True,
         )
     return v, cents.withColumn("cc", F.expr(DOT_SPARK.format(a="cent", b="cent")))
 
@@ -380,20 +381,19 @@ def kmeans_silhouette_sample(ctx):
 
     Scale shape: assignment is the existing broadcast-centroid scan; the
     pairwise stage runs ONLY on the bottom-SIL_SAMPLE-by-md5 sample
-    (bounded_checkpoint-registered, O(SIL_SAMPLE²) anywhere); distances
+    (a bounded barrier, O(SIL_SAMPLE²) anywhere); distances
     are 6-dp-quantized exact-decimal means so both engines agree."""
-    from dbt_tpch_spark.plans.audit import bounded_checkpoint
-
     v, cents = _fit(ctx)
     assign = _assign_ranked(v, cents, 1).filter(F.col("rn") == 1)
     skey = F.md5(
         F.concat(F.lit(_SIL_SALT), F.col("vec_id").cast("string"))
     )
-    sample = bounded_checkpoint(
+    sample = barrier(
         assign.select("vec_id", "emb", "vv", "cell_id", skey.alias("sk"))
         .orderBy("sk")
         .limit(SIL_SAMPLE)
-        .drop("sk")
+        .drop("sk"),
+        bounded=True,
     )
     a_side = sample.select(
         F.col("vec_id").alias("vec_a"),
@@ -420,7 +420,7 @@ def kmeans_silhouette_sample(ctx):
             "cell_b",
             rnd(F.sqrt(F.greatest(d2, F.lit(0.0))), 6).alias("dist"),
         )
-        .localCheckpoint(eager=True)
+        .transform(barrier)
     )
     a_tbl = (
         pairs.filter(F.col("cell_a") == F.col("cell_b"))
@@ -533,7 +533,7 @@ def dedup_semantic_pairs(ctx):
     members = (
         _assign_ranked(v, cents, 1)
         .filter(F.col("rn") == 1)
-        .localCheckpoint(eager=True)
+        .transform(barrier)
     )
     a = members.select(
         F.col("cell_id"),

@@ -66,7 +66,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from dbt_tpch_spark.functions import bucketed_windows, dsum, rnd
+from dbt_tpch_spark.functions import barrier, bucketed_windows, dsum, rnd
 from dbt_tpch_spark.models.oracle import dsum_sql, oracle, rnd_sql
 from dbt_tpch_spark.plans import model
 
@@ -213,7 +213,7 @@ def doc_quality_calibration(ctx):
     gap = F.abs(avg_score - pos_rate)
     # ≤10-row frame read by two plan sites (the rows and the ECE rollup);
     # the lazy checkpoint stops the corpus scan from running twice.
-    per_bin = per_bin.localCheckpoint(eager=False)
+    per_bin = barrier(per_bin, eager=False)
     rows = per_bin.select(
         "bin",
         "n",
@@ -543,7 +543,7 @@ def vocab_heaps_fit(ctx):
         .filter(F.col("term") != "")
         .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).cast("long").alias("tf"))
-        .localCheckpoint(eager=True)
+        .transform(barrier)
     )
     dt = dtf.groupBy("doc_id").agg(
         F.sum("tf").cast("long").alias("n_tokens")

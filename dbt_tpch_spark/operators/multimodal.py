@@ -20,6 +20,7 @@ import pandas as pd
 
 from pyspark.sql import functions as F
 
+from dbt_tpch_spark.functions import barrier
 from dbt_tpch_spark.plans import model
 from dbt_tpch_spark.models.oracle import oracle
 
@@ -336,9 +337,7 @@ def multimodal_phash_dedup(ctx):
         for batch in batches:
             yield _phash_batch(batch)
 
-    hashes = payload.mapInPandas(gen, schema=PHASH_SCHEMA).localCheckpoint(
-        eager=True
-    )
+    hashes = barrier(payload.mapInPandas(gen, schema=PHASH_SCHEMA))
     bands = hashes.select(
         "doc_id",
         "hash_hi",

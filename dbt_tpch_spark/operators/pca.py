@@ -24,7 +24,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from dbt_tpch_spark.functions import rnd
+from dbt_tpch_spark.functions import barrier, rnd
 from dbt_tpch_spark.models.oracle import oracle, rnd_sql
 from dbt_tpch_spark.plans import model
 
@@ -88,7 +88,7 @@ def _covariance(ctx):
                 12,
             ).alias("c"),
         )
-        .localCheckpoint(eager=True)
+        .transform(barrier)
     )
     # mirror the strict upper triangle; c_ij = c_ji by the identity above
     # (n*mi*mj is symmetric too), so the union IS the old full matrix
@@ -129,7 +129,7 @@ def embeddings_pca_variance(ctx):
                 F.col("i").alias("j"),
                 rnd(F.col("w") / F.col("nrm"), 12).alias("v"),
             )
-            .localCheckpoint(eager=True)
+            .transform(barrier)
         )
     vi = v.select(F.col("j").alias("i"), F.col("v").alias("vi"))
     lam = (

@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from dbt_tpch_spark.functions import dsum, global_topk, rnd
+from dbt_tpch_spark.functions import barrier, dsum, global_topk, rnd
 from dbt_tpch_spark.models.oracle import dsum_sql, oracle, rnd_sql
 from dbt_tpch_spark.plans import model
 from dbt_tpch_spark.operators.dedup import DOT_SPARK, dot_duck
@@ -130,7 +130,7 @@ def _with_cc(cents):
 def _fit(ctx, iters: int = PQ_ITERS, emb=None):
     """Train all M codebooks with ``iters`` grouped Lloyd rounds; returns
     (subvectors, codebook with cc)."""
-    sub = _subvectors(ctx, emb=emb).localCheckpoint(eager=True)
+    sub = barrier(_subvectors(ctx, emb=emb))
     seeds = (emb if emb is not None else ctx.source("embeddings")).select(
         "embedding",
         F.md5(F.concat(F.lit(SEED_SALT), F.col("vec_id").cast("string"))).alias("sk"),
@@ -149,7 +149,7 @@ def _fit(ctx, iters: int = PQ_ITERS, emb=None):
             "code",
             F.expr(f"slice(embedding, m * {SUBDIM} + 1, {SUBDIM})").alias("cent"),
         )
-        .localCheckpoint(eager=True)
+        .transform(barrier)
     )
     for _ in range(iters):
         # argmin as a map-side-combinable aggregation (see kmeans._fit):
@@ -176,7 +176,7 @@ def _fit(ctx, iters: int = PQ_ITERS, emb=None):
                     lambda s: s["mv"],
                 ).alias("cent")
             )
-            .localCheckpoint(eager=True)
+            .transform(barrier)
         )
     return sub, _with_cc(cents)
 
@@ -260,9 +260,7 @@ def _adc_topk(sub, cents):
     # the hard broadcast hint and the equality-free scoring join below
     # (the lazy barrier costs nothing extra: the frame is consumed once,
     # by the broadcast build).
-    from dbt_tpch_spark.plans.audit import bounded_checkpoint
-
-    lut_arr = bounded_checkpoint(
+    lut_arr = barrier(
         lut.groupBy("query_id").agg(
             F.transform(
                 F.array_sort(F.collect_list(F.struct("m", "code", "pd2"))),
@@ -270,6 +268,7 @@ def _adc_topk(sub, cents):
             ).alias("pd2s")
         ),
         eager=False,
+        bounded=True,
     )
     # exact decimal fold of the M lookups (element_at is 1-based), the
     # in-row twin of dsum: quantize each term to DECIMAL(27,6), accumulate

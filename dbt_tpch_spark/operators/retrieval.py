@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from dbt_tpch_spark.functions import davg, dsum, isum, rnd
+from dbt_tpch_spark.functions import barrier, davg, dsum, isum, rnd
 from dbt_tpch_spark.models.oracle import (
     davg_sql,
     dsum_sql,
@@ -176,7 +176,7 @@ def docs_bm25_topk(ctx):
     totals, and both sides of the hit join); left lazy, Catalyst would
     re-tokenize the corpus once per consumer, so it is materialized eagerly
     once — the same boundary a 100 TB deployment would persist."""
-    dtf = _doc_term_freq(ctx).localCheckpoint(eager=True)
+    dtf = barrier(_doc_term_freq(ctx))
     doclens = dtf.groupBy("doc_id").agg(F.sum("tf").cast("long").alias("dl"))
     totals = doclens.agg(
         F.count("*").cast("double").alias("n_docs"),
@@ -613,7 +613,7 @@ def docs_ngram_decontam(ctx):
     Scale shape: eval grams are a distinct projection of a tiny split and
     broadcast into the match join; the training grams stream through once
     (checkpointed — they feed both the totals and the match)."""
-    grams = _gram8_df(ctx).localCheckpoint(eager=True)
+    grams = barrier(_gram8_df(ctx))
     eval_grams = (
         grams.filter(F.col("doc_id") % DECON_MOD == 0).select("gram").distinct()
     )
@@ -744,7 +744,7 @@ def _tfidf_topk(ctx):
     ranking over the fixed query set — the second ranker shared by
     docs_rank_overlap and docs_rrf_fusion. Returns (query_id, doc_id,
     rank)."""
-    dtf = _doc_term_freq(ctx).localCheckpoint(eager=True)
+    dtf = barrier(_doc_term_freq(ctx))
     termdf = dtf.groupBy("term").agg(F.count("*").cast("long").alias("df"))
     totals = dtf.agg(
         F.countDistinct("doc_id").cast("double").alias("n_docs")
@@ -977,7 +977,7 @@ def source_js_divergence(ctx):
     )
     st = toks.groupBy("source", "term").agg(
         F.count(F.lit(1)).cast("long").alias("c_sw")
-    ).localCheckpoint(eager=False)
+    ).transform(barrier, eager=False)
     ug = st.groupBy("term").agg(F.sum("c_sw").cast("long").alias("c_w"))
     stot = st.groupBy("source").agg(F.sum("c_sw").cast("double").alias("n_s"))
     tot = ug.agg(F.sum("c_w").cast("double").alias("n_tokens"))
@@ -1181,7 +1181,7 @@ def docs_oov_rate(ctx):
     stf = (
         toks.groupBy("source", "term")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        .localCheckpoint(eager=True)
+        .transform(barrier)
     )
     census = stf.groupBy("term").agg(isum(F.col("cnt")).alias("total"))
     vocab = (
@@ -1267,7 +1267,7 @@ def docs_ngram_novelty(ctx):
         "doc_id",
         _split_col(F.col("doc_id")).alias("split"),
         F.explode("words").alias("gram"),
-    ).localCheckpoint(eager=True)
+    ).transform(barrier)
     train_vocab = (
         ex.filter(F.col("split") == "train").select("gram").distinct()
     )

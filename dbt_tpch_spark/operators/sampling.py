@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from dbt_tpch_spark.plans import model
-from dbt_tpch_spark.functions import dsum, isum, rnd
+from dbt_tpch_spark.functions import barrier, dsum, isum, rnd
 from dbt_tpch_spark.models.oracle import dsum_sql, isum_sql, oracle, rnd_sql
 
 #: per-language keep rates in 1/16ths (hex-digit threshold). The majority
@@ -683,7 +683,7 @@ def docs_mixture_temperature(ctx):
     # re-executed per consumer
     counts = d.groupBy("source").agg(
         F.count(F.lit(1)).cast("long").alias("n_available")
-    ).localCheckpoint(eager=True)
+    ).transform(barrier)
     total = counts.agg(
         F.sum("n_available").cast("double").alias("n_total")
     )
@@ -701,7 +701,7 @@ def docs_mixture_temperature(ctx):
                 ).cast("long"),
             }
         )
-        .localCheckpoint(eager=True)
+        .transform(barrier)
     )
     w = Window.partitionBy("source").orderBy(
         F.md5(F.concat(F.lit(MIX_SALT), F.col("doc_id").cast("string"))),
@@ -871,7 +871,7 @@ def docs_split_leakage(ctx):
     la = labels.withColumnsRenamed({"doc_id": "doc_a", "cluster_id": "ca"})
     lb = labels.withColumnsRenamed({"doc_id": "doc_b", "cluster_id": "cb"})
     enriched = (
-        pairs.join(la, "doc_a").join(lb, "doc_b").localCheckpoint(eager=True)
+        pairs.join(la, "doc_a").join(lb, "doc_b").transform(barrier)
     )
     scheme_rows = enriched.select(
         F.explode(
@@ -1016,7 +1016,7 @@ def docs_token_waterfill(ctx):
             ),
         )
         .withColumn("prev_c", F.lag("n_tokens").over(w))
-        .localCheckpoint(eager=True)
+        .transform(barrier)
     )
     t_budget = F.lit(WATERFILL_FRACTION) * F.col("total")
     lam = (t_budget - (F.col("pref") - F.col("n_tokens")).cast("double")) / (

@@ -15,7 +15,7 @@ import hashlib
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from dbt_tpch_spark.functions import rnd
+from dbt_tpch_spark.functions import barrier, rnd
 from dbt_tpch_spark.plans import model
 from dbt_tpch_spark.plans.audit import register_bounded_filter
 from dbt_tpch_spark.models.oracle import dsum_sql, oracle, rnd_sql
@@ -916,7 +916,7 @@ def embeddings_xlabel_margin(ctx):
         a.crossJoin(b)
         .withColumn("cosine", rnd(cos, 6))
         .select("src_id", "dst_id", "cosine")
-        .localCheckpoint(eager=True)
+        .transform(barrier)
     )
     w_f = Window.partitionBy("src_id").orderBy(F.col("cosine").desc(), "dst_id")
     w_b = Window.partitionBy("dst_id").orderBy(F.col("cosine").desc(), "src_id")
@@ -1058,7 +1058,7 @@ def embeddings_kcenter_sample(ctx):
     KxN literal matrix. Distances quantize to 6 dp BEFORE the argmax so
     both engines pick identical centers."""
     v = ctx.source("embeddings").select("vec_id", "label", "embedding")
-    seed = v.orderBy("vec_id").limit(1).localCheckpoint(eager=True)
+    seed = barrier(v.orderBy("vec_id").limit(1))
     mind = (
         v.crossJoin(F.broadcast(seed.select(F.col("embedding").alias("c_emb"))))
         .select(
@@ -1067,7 +1067,7 @@ def embeddings_kcenter_sample(ctx):
             "embedding",
             rnd(_d2_spark("embedding", "c_emb"), 6).alias("mind"),
         )
-        .localCheckpoint(eager=True)
+        .transform(barrier)
     )
     picked = [
         seed.select(
@@ -1081,7 +1081,7 @@ def embeddings_kcenter_sample(ctx):
         nxt = (
             mind.orderBy(F.col("mind").desc(), "vec_id")
             .limit(1)
-            .localCheckpoint(eager=True)
+            .transform(barrier)
         )
         picked.append(
             nxt.select(
@@ -1105,7 +1105,7 @@ def embeddings_kcenter_sample(ctx):
                         rnd(_d2_spark("embedding", "c_emb"), 6),
                     ).alias("mind"),
                 )
-                .localCheckpoint(eager=True)
+                .transform(barrier)
             )
     out = picked[0]
     for p in picked[1:]:
@@ -1207,19 +1207,18 @@ def embeddings_dup_threshold_curve(ctx):
     )
     # checkpoint per-VECTOR norms: inlined, the norm_sq decimal dot would
     # be re-evaluated per PAIR on both sides (measured 3x the pair cost).
-    # bounded_checkpoint registers the frame as fixed-size (it descends
+    # a bounded barrier registers the frame as fixed-size (it descends
     # from the CURVE_SAMPLE limit) so the pair-stage invariant can see
     # through the checkpoint's provenance erasure.
-    from dbt_tpch_spark.plans.audit import bounded_checkpoint
-
-    norms = bounded_checkpoint(
+    norms = barrier(
         sampled.select(
             "vec_id",
             F.col("embedding").alias("emb"),
             F.expr(DOT_SPARK.format(a="embedding", b="embedding")).alias(
                 "norm_sq"
             ),
-        )
+        ),
+        bounded=True,
     )
     a = norms.select(
         F.col("vec_id").alias("vec_a"),
@@ -1242,7 +1241,7 @@ def embeddings_dup_threshold_curve(ctx):
     scored = (
         a.join(b, F.col("vec_a") < F.col("vec_b"))
         .select(cos.alias("cosine"))
-        .localCheckpoint(eager=True)
+        .transform(barrier)
     )
     binned = scored.filter(F.col("cosine") >= CURVE_MIN_COS).select(
         (
@@ -1325,22 +1324,22 @@ def embeddings_knn_label_accuracy(ctx):
     counts to compute the overall rate.
 
     Scale shape: the pairwise stage runs ONLY on the
-    bottom-KNN_SAMPLE-by-md5 sample (bounded_checkpoint-registered); the
+    bottom-KNN_SAMPLE-by-md5 sample (a bounded barrier); the
     neighbor rank is a sample-grain window; everything downstream is
     label-cardinality."""
     from dbt_tpch_spark.functions import dsum
-    from dbt_tpch_spark.plans.audit import bounded_checkpoint
 
     e = ctx.source("embeddings")
     skey = F.md5(
         F.concat(F.lit(_KNN_SALT), F.col("vec_id").cast("string"))
     )
-    sample = bounded_checkpoint(
+    sample = barrier(
         _norms(e)
         .select("vec_id", "label", "emb", "norm", skey.alias("sk"))
         .orderBy("sk")
         .limit(KNN_SAMPLE)
-        .drop("sk")
+        .drop("sk"),
+        bounded=True,
     )
     q = sample.select(
         F.col("vec_id").alias("qid"),
@@ -1366,7 +1365,7 @@ def embeddings_knn_label_accuracy(ctx):
             "n_label",
             rnd(cos, 6).alias("cosine"),
         )
-        .localCheckpoint(eager=True)
+        .transform(barrier)
     )
     w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), "nid")
     knn = scored.withColumn("rk", F.row_number().over(w)).filter(

@@ -38,7 +38,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from dbt_tpch_spark.functions import davg, isum, rnd
+from dbt_tpch_spark.functions import barrier, davg, isum, rnd
 from dbt_tpch_spark.models.oracle import (
     davg_sql,
     dsum_sql,
@@ -118,7 +118,7 @@ def dedup_ppjoin(ctx):
     # BOTH the document-frequency census and the rank join, and each
     # consumer re-ran the regex normalize + split over the raw corpus —
     # the pipeline's measured-expensive step (see tokens_df).
-    toks_b = tokens_df(ctx).localCheckpoint(eager=True)
+    toks_b = barrier(tokens_df(ctx))
     sh = toks_b.select(
         "doc_id", F.explode(shingle_col(3)).alias("shingle")
     )
@@ -141,7 +141,7 @@ def dedup_ppjoin(ctx):
     pref = (
         ranked.filter(F.col("rk") <= prefix_len)
         .select("doc_id", "shingle", "rk", "sz")
-        .localCheckpoint(eager=True)
+        .transform(barrier)
     )
     a = pref.withColumnsRenamed({"doc_id": "doc_a", "rk": "rk_a", "sz": "sz_a"})
     b = pref.withColumnsRenamed({"doc_id": "doc_b", "rk": "rk_b", "sz": "sz_b"})
@@ -237,7 +237,7 @@ def dedup_ppjoin(ctx):
         # costs +3-6 s — the downstream projection+filter would re-run the
         # whole verify join): inter/union/jaccard and the threshold filter
         # all read these three integers per pair
-        .localCheckpoint(eager=True)
+        .transform(barrier)
     )
     inter = F.col("sa") + F.col("sb") - F.col("udist")
     jac = inter.cast("double") / F.nullif(F.col("udist"), F.lit(0))
@@ -327,7 +327,7 @@ def _snm_adjacency(d, carry_cols=()):
         d.withColumn("_rn", F.row_number().over(w_b))
         .filter(F.col("_rn") <= SNM_WINDOW)
         .drop("_rn")
-        .localCheckpoint(eager=True)
+        .transform(barrier)
     )
     buckets = heads.select("bucket").distinct()
     pred_map = buckets.withColumnRenamed("bucket", "from_bucket").join(
@@ -588,12 +588,11 @@ def customers_linkage_scores(ctx):
         return per_v.agg(
             dsum(rnd(p * p, 12)).alias(f"u_{field}")
         )
-    # 1-row frame; bounded_checkpoint keeps its SF-independence visible to
+    # 1-row frame; a bounded barrier keeps its SF-independence visible to
     # the pair-stage invariant after the checkpoint erases provenance
-    from dbt_tpch_spark.plans.audit import bounded_checkpoint
-
-    u = bounded_checkpoint(
-        _u("nation").crossJoin(_u("segment")).crossJoin(_u("band"))
+    u = barrier(
+        _u("nation").crossJoin(_u("segment")).crossJoin(_u("band")),
+        bounded=True,
     )
 
     def _w(field):
@@ -743,7 +742,7 @@ def customers_entity_clusters(ctx):
         edges.select(F.col("a").alias("node"))
         .distinct()
         .withColumn("entity_id", F.col("node"))
-        .localCheckpoint(eager=True)
+        .transform(barrier)
     )
     for _ in range(ER_MAX_ROUNDS):
         nbr_min = (
@@ -771,7 +770,7 @@ def customers_entity_clusters(ctx):
                     "entity_id"
                 ),
             )
-            .localCheckpoint(eager=True)
+            .transform(barrier)
         )
         changed = (
             new_labels.alias("n")
@@ -782,6 +781,9 @@ def customers_entity_clusters(ctx):
         labels = new_labels
         if changed == 0:
             break
+    # every round's labels are materialized — the edge cache has no
+    # consumer left
+    edges.unpersist()
     c = ctx.source("customer").select(F.col("c_custkey").alias("customer_key"))
     full = c.join(labels, c.customer_key == labels.node, "left").select(
         "customer_key",

@@ -32,7 +32,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from dbt_tpch_spark.functions import gated_broadcast, rnd
+from dbt_tpch_spark.functions import barrier, gated_broadcast, rnd
 from dbt_tpch_spark.models.oracle import oracle, rnd_sql
 from dbt_tpch_spark.plans import model
 
@@ -660,7 +660,7 @@ def events_hll_type_overlap(ctx):
     regs = hashed.select("event_type", "user_id", *_spark_register_cols())
     per_bucket = regs.groupBy("event_type", "bucket").agg(
         F.max("rho").alias("m_j")
-    ).localCheckpoint(eager=True)
+    ).transform(barrier)
 
     def summarize(df, keys):
         z_present = (
@@ -878,9 +878,9 @@ def lineitem_joinsize_cms(ctx):
     — the join itself is never materialized."""
     l = ctx.source("lineitem")
     o = ctx.source("orders")
-    cl = _cj_cells(l, "l_orderkey", "a").localCheckpoint(eager=True)
+    cl = barrier(_cj_cells(l, "l_orderkey", "a"))
     co = _cj_cells(o, "o_orderkey", "b")
-    cp = _cj_cells(l, "l_partkey", "p").localCheckpoint(eager=True)
+    cp = barrier(_cj_cells(l, "l_partkey", "p"))
     est_fk = (
         cl.join(co, ["salt", "bucket"])
         .groupBy("salt")
@@ -1140,7 +1140,7 @@ def events_hll_sliding_users(ctx):
 
     e = ctx.source("events")
     hashed = _hll_hashed_events(e)
-    panes = hll_hour_panes(e).localCheckpoint(eager=True)
+    panes = barrier(hll_hour_panes(e))
     hours = panes.select("hour_idx").distinct()
     grid = hours.select(
         "hour_idx", F.explode(F.sequence(F.lit(0), F.lit(HLL_M - 1))).alias("bucket")

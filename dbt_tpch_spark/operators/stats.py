@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from dbt_tpch_spark.functions import (
+    barrier,
     dsum,
     global_row_number,
     global_topk,
@@ -92,7 +93,7 @@ def events_chi_square(ctx):
     cells = (
         e.groupBy("event_type", "dow")
         .agg(F.count(F.lit(1)).alias("n_obs"))
-        .localCheckpoint(eager=True)
+        .transform(barrier)
     )
     row_m = cells.groupBy("event_type").agg(F.sum("n_obs").alias("row_total"))
     col_m = cells.groupBy("dow").agg(F.sum("n_obs").alias("col_total"))
@@ -423,7 +424,7 @@ def events_mutual_information(ctx):
     cells = (
         e.groupBy("event_type", "dow")
         .agg(F.count(F.lit(1)).alias("n_obs"))
-        .localCheckpoint(eager=True)
+        .transform(barrier)
     )
     row_m = cells.groupBy("event_type").agg(F.sum("n_obs").alias("row_total"))
     col_m = cells.groupBy("dow").agg(F.sum("n_obs").alias("col_total"))
@@ -899,7 +900,7 @@ def events_ab_cuped(ctx):
             ).alias("y"),
         )
         .withColumn("arm", F.expr(_ARM))
-        .localCheckpoint(eager=False)
+        .transform(barrier, eager=False)
     )
     pooled = per_user.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
@@ -1389,7 +1390,7 @@ def docs_quality_quantile_norm(ctx):
     cells = (
         scored.groupBy("source", "bin")
         .agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
-        .localCheckpoint(eager=True)
+        .transform(barrier)
     )
     w_src = (
         Window.partitionBy("source")

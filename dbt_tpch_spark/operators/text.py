@@ -18,7 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from dbt_tpch_spark.functions import rnd
+from dbt_tpch_spark.functions import barrier, rnd
 from dbt_tpch_spark.plans import model
 from dbt_tpch_spark.models.oracle import dsum_sql, oracle, rnd_sql
 
@@ -778,7 +778,7 @@ def doc_bigram_surprisal(ctx):
     dtf = (
         bigrams.groupBy("doc_id", "lang", "prev", "w")
         .agg(F.count(F.lit(1)).cast("long").alias("tf"))
-        .localCheckpoint(eager=True)
+        .transform(barrier)
     )
     bc = dtf.groupBy("prev", "w").agg(F.sum("tf").cast("long").alias("c_bg"))
     cc = bc.groupBy("prev").agg(F.sum("c_bg").cast("long").alias("c_prev"))
@@ -1035,7 +1035,7 @@ def docs_dsir_weights(ctx):
     dtf = (
         toks.groupBy("doc_id", "lang", "source", "term")
         .agg(F.count("*").cast("long").alias("tf"))
-        .localCheckpoint(eager=True)
+        .transform(barrier)
     )
     ug_c = dtf.groupBy("term").agg(F.sum("tf").cast("long").alias("c_c"))
     ug_t = (
@@ -1167,7 +1167,7 @@ def lm_heldout_perplexity(ctx):
     dtf = (
         bigrams.groupBy("doc_id", "is_train", "prev", "w")
         .agg(F.count(F.lit(1)).cast("long").alias("tf"))
-        .localCheckpoint(eager=True)
+        .transform(barrier)
     )
     train = dtf.filter(F.col("is_train"))
     bc = train.groupBy("prev", "w").agg(F.sum("tf").cast("long").alias("c_bg"))
@@ -1411,7 +1411,7 @@ def _bpe_train_loop(wc):
                 ).alias("word"),
                 "n",
             )
-            .localCheckpoint(eager=True)
+            .transform(barrier)
         )
         rounds.append(
             best.crossJoin(syms_of(cur))
@@ -1462,7 +1462,7 @@ def bpe_train_merges(ctx):
     wc = (
         words.groupBy("word")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .localCheckpoint(eager=True)
+        .transform(barrier)
     )
     return _bpe_train_loop(wc)
 

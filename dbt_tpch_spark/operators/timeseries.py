@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from dbt_tpch_spark.functions import dsum, rnd
+from dbt_tpch_spark.functions import barrier, dsum, rnd
 from dbt_tpch_spark.models.oracle import (
     davg_sql,
     dstddev_samp_sql,
@@ -923,7 +923,7 @@ def events_seasonal_anomaly(ctx):
             "event_type", F.date_trunc("hour", F.col("ts")).alias("bucket")
         )
         .agg(F.count(F.lit(1)).cast("long").alias("n_events"))
-        .localCheckpoint(eager=True)
+        .transform(barrier)
     )
     hod = F.hour("bucket").cast("long")
     baseline = (
@@ -1914,7 +1914,7 @@ def daily_revenue_acf(ctx):
     series = (
         o.groupBy(F.col("o_orderdate").cast("date").alias("day"))
         .agg(dsum(F.col("o_totalprice")).alias("rev"))
-        .localCheckpoint(eager=True)
+        .transform(barrier)
     )
     lags = ctx.spark.range(1, ACF_MAX_LAG + 1).select(
         F.col("id").cast("int").alias("lag")
@@ -2019,19 +2019,18 @@ def daily_revenue_theilsen(ctx):
     (a century is ~36.5K days) — so the pairwise O(days^2) frame and its
     rank are bounded regardless of corpus size; the one corpus-sized
     operation is the initial day aggregation."""
-    from dbt_tpch_spark.plans.audit import bounded_checkpoint
-
     o = ctx.source("orders")
-    # bounded_checkpoint: the series is day-grain (calendar-bounded, not
+    # bounded barrier: the series is day-grain (calendar-bounded, not
     # SF-linear) — register it so the pairwise-slope theta join is seen as
     # a bounded pair stage, not an all-pairs scale killer
-    series = bounded_checkpoint(
+    series = barrier(
         o.groupBy(F.col("o_orderdate").cast("date").alias("day"))
         .agg(dsum(F.col("o_totalprice")).alias("rev"))
         .select(
             F.datediff(F.col("day"), F.lit(TS_EPOCH).cast("date")).alias("dn"),
             "rev",
-        )
+        ),
+        bounded=True,
     )
     a = series.withColumnsRenamed({"dn": "dn_i", "rev": "rev_i"})
     b = series.withColumnsRenamed({"dn": "dn_j", "rev": "rev_j"})
@@ -2311,7 +2310,7 @@ def events_mad_anomaly(ctx):
     daily = (
         e.groupBy(F.date_trunc("day", F.col("ts")).alias("day"))
         .agg(dsum(F.col("value")).alias("revenue"))
-        .localCheckpoint(eager=True)
+        .transform(barrier)
     )
     med = daily.agg(
         rnd(F.percentile("revenue", F.lit(0.5)), 6).alias("med")
@@ -2405,7 +2404,7 @@ def events_watermark_lateness_profile(ctx):
         "event_id", F.unix_micros(F.col("ts")).alias("us")
     )
     b = range_bucket_expr(e, "event_id", True, 32)
-    base = e.withColumn("_b", b).localCheckpoint(eager=False)
+    base = barrier(e.withColumn("_b", b), eager=False)
     w_local = (
         Window.partitionBy("_b")
         .orderBy("event_id")
@@ -2591,7 +2590,7 @@ def events_funnel_1h(ctx):
         e.filter(F.col("event_type") == "signup")
         .groupBy("user_id")
         .agg(F.min("ts").alias("t1"))
-        .localCheckpoint(eager=False)
+        .transform(barrier, eager=False)
     )
     s2 = (
         e.filter(F.col("event_type") == "view")
@@ -2599,7 +2598,7 @@ def events_funnel_1h(ctx):
         .filter((F.col("ts") > F.col("t1")) & (F.col("ts") <= F.col("t1") + box))
         .groupBy("user_id")
         .agg(F.min("ts").alias("t2"))
-        .localCheckpoint(eager=False)
+        .transform(barrier, eager=False)
     )
     s3 = (
         e.filter(F.col("event_type") == "purchase")

@@ -29,7 +29,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from dbt_tpch_spark.functions import rnd
+from dbt_tpch_spark.functions import barrier, rnd
 from dbt_tpch_spark.models.oracle import oracle, rnd_sql
 from dbt_tpch_spark.operators.dedup import (
     _NORM_TEXT_DUCK,
@@ -338,7 +338,7 @@ def docs_winnow_dups(ctx):
         # four consumers (per-doc census, hot-fp valve, both join sides)
         # would each re-run hashing+winnowing; a deployment persists the
         # fingerprint index, so materialize it once here too
-        .localCheckpoint(eager=True)
+        .transform(barrier)
     )
     per_doc = fps.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_fps")
@@ -484,7 +484,7 @@ def docs_dup_spans(ctx):
             (F.col("pos0") + 1).alias("pos"),
             F.md5("sh_str").alias("sh"),
         )
-        .localCheckpoint(eager=True)
+        .transform(barrier)
     )
     dup = (
         pos.groupBy("sh")
@@ -617,7 +617,7 @@ def docs_excise_spans(ctx):
     # regex normalize + split over the raw corpus — materialize it once
     # (round-11); pos additionally feeds the census AND the probe join,
     # so it gets its own barrier (same reasoning as docs_dup_spans)
-    toks_b = tokens_df(ctx).localCheckpoint(eager=True)
+    toks_b = barrier(tokens_df(ctx))
     pos = (
         toks_b.select(
             "doc_id",
@@ -630,7 +630,7 @@ def docs_excise_spans(ctx):
             (F.col("pos0") + 1).alias("pos"),
             F.md5("sh_str").alias("sh"),
         )
-        .localCheckpoint(eager=True)
+        .transform(barrier)
     )
     census = (
         pos.groupBy("sh")
@@ -671,7 +671,7 @@ def docs_excise_spans(ctx):
         # would each re-run the census+islands subtree — the dominant
         # cost at scale; the surviving-span frame is tiny (bounded by
         # excisable dup structure), so materialize it once
-        .localCheckpoint(eager=True)
+        .transform(barrier)
     )
     removed = spans.select(
         "doc_id",

@@ -205,13 +205,6 @@ def mark_bounded(df: DataFrame) -> DataFrame:
     return df
 
 
-def bounded_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
-    """``localCheckpoint`` + :func:`mark_bounded` — the checkpoint used for
-    provably fixed-size frames (samples, scalar state) whose boundedness
-    must survive the checkpoint's provenance erasure."""
-    return mark_bounded(df.localCheckpoint(eager=eager))
-
-
 _BOUNDED_LEAVES = {
     "GlobalLimit",
     "WindowGroupLimit",

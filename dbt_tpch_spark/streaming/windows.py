@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dbt_tpch_spark.functions import davg, dsum, isum
+from dbt_tpch_spark.functions import barrier, davg, dsum, isum
 from dbt_tpch_spark.plans import model
 from dbt_tpch_spark.models.oracle import (
     davg_sql,
@@ -1049,7 +1049,7 @@ def events_schema_drift(ctx):
         )
         .groupBy("day", "key")
         .agg(F.count(F.lit(1)).cast("long").alias("n_present"))
-        .localCheckpoint(eager=True)
+        .transform(barrier)
     )
     days = km.select("day").distinct()
     prv = km.select(

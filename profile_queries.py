@@ -74,6 +74,7 @@ def main() -> None:
     tag = sys.argv[1]
     only = set(sys.argv[2:])
 
+    from dbt_tpch_spark.functions import release_barriers
     from dbt_tpch_spark.plans import MODELS, Context, import_all_models
     from dbt_tpch_spark.session import get_spark
 
@@ -129,6 +130,7 @@ def main() -> None:
             noop_sec = time.perf_counter() - t0
             totals1 = stage_totals(spark)
             sc.setJobDescription(None)
+            release_barriers(spark)
 
             def cpu(phase: str) -> float:
                 return round(sum(r["cpu_sec"] for r in stages if r["phase"] == phase), 2)

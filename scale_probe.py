@@ -334,10 +334,10 @@ def measure_recall(spark, corpus_dir: str, planted: dict) -> dict:
     per-tier measured recall (found planted pairs / planted pairs). The
     membership check filters to the reserved id range first, so the
     collect is bounded by the planted set size at any corpus scale."""
+    from dbt_tpch_spark.functions import release_barriers
     from dbt_tpch_spark.plans import Context, import_all_models
 
     import_all_models()
-    ctx = Context(spark, corpus_dir)
     out: dict[str, dict] = {}
     for query, kind, ca, cb in (
         ("dedup_embedding_cosine", "cosine", "vec_a", "vec_b"),
@@ -345,11 +345,13 @@ def measure_recall(spark, corpus_dir: str, planted: dict) -> dict:
     ):
         found = {
             (r[ca], r[cb])
-            for r in ctx.ref(query)
+            for r in Context(spark, corpus_dir)
+            .ref(query)
             .filter(F.col(ca) >= RECALL_ID_BASE)
             .select(ca, cb)
             .collect()
         }
+        release_barriers(spark)
         out[query] = {
             tier: round(
                 sum((a, b) in found for a, b in pairs) / len(pairs), 4
@@ -361,7 +363,9 @@ def measure_recall(spark, corpus_dir: str, planted: dict) -> dict:
 
 def _run_query(spark, sf_dir: str, name: str) -> dict:
     """Execute the full plan (noop sink: no driver collect, no output
-    skew) and return wall / CPU / shuffle-write deltas plus row count."""
+    skew) and return wall / CPU / shuffle-write deltas plus row count.
+    The query's barrier blocks are freed once it is measured."""
+    from dbt_tpch_spark.functions import release_barriers
     from dbt_tpch_spark.plans import Context, import_all_models
 
     import_all_models()
@@ -372,6 +376,7 @@ def _run_query(spark, sf_dir: str, name: str) -> dict:
     df.write.format("noop").mode("overwrite").save()
     wall = time.perf_counter() - t0
     cpu1, shuf1 = stage_totals(spark)
+    release_barriers(spark)
     return {
         "wall_sec": round(wall, 3),
         "cpu_sec": round((cpu1 - cpu0) / 1e9, 3),

@@ -83,3 +83,20 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR_SMALL
+
+
+@pytest.fixture(autouse=True)
+def _release_barriers(request):
+    """Free the barrier blocks a Spark test left behind, so block storage
+    stays bounded over a long session. Only tests that requested ``spark``
+    touch a JVM; pure-Python tests start none."""
+    spark = (
+        request.getfixturevalue("spark")
+        if "spark" in request.fixturenames
+        else None
+    )
+    yield
+    if spark is not None:
+        from dbt_tpch_spark.functions import release_barriers
+
+        release_barriers(spark)

@@ -546,7 +546,7 @@ def test_no_scale_killer_plan_shapes(spark, sf_dir):
       (the single-task window scale killer, round-3 verdict class);
     - no explicit ``F.broadcast`` hint on a key-grain frame (the hard-hint
       OOM class the round-4 verdict found in operators/graph.py — gated
-      sites must route through _node_state/gated_broadcast, which this
+      sites must route through functions.gated_broadcast, which this
       sweep closes, so any hint that survives is ungated by construction);
     - no Join without an equality conjunct where neither side is provably
       bounded (the all-pairs cartesian/theta scale killer, round-5
@@ -555,11 +555,9 @@ def test_no_scale_killer_plan_shapes(spark, sf_dir):
     """
     import __spark_entry__ as entrymod
     import dbt_tpch_spark.functions as fx
-    import dbt_tpch_spark.operators.graph as g
 
-    saved = (fx.BROADCAST_STATE_MAX_ROWS, g.BROADCAST_STATE_MAX_NODES)
+    saved = fx.BROADCAST_STATE_MAX_ROWS
     fx.BROADCAST_STATE_MAX_ROWS = 0
-    g.BROADCAST_STATE_MAX_NODES = 0
     offenders = {}
     try:
         for name, fn in entrymod.queries().items():
@@ -574,7 +572,7 @@ def test_no_scale_killer_plan_shapes(spark, sf_dir):
             if pairs:
                 offenders.setdefault(name, []).append(["pair-stage"] + pairs)
     finally:
-        fx.BROADCAST_STATE_MAX_ROWS, g.BROADCAST_STATE_MAX_NODES = saved
+        fx.BROADCAST_STATE_MAX_ROWS = saved
     assert not offenders, offenders
 
 
@@ -606,7 +604,7 @@ def test_pair_stage_invariant_catches_unbounded_theta_join(spark, sf_dir):
     registered bounded checkpoint must pass."""
     from pyspark.sql import functions as F
 
-    from dbt_tpch_spark.plans.audit import bounded_checkpoint
+    from dbt_tpch_spark.functions import barrier
 
     e = Context(spark, sf_dir).source("embeddings").select("vec_id")
     a = e.withColumnRenamed("vec_id", "vec_a")
@@ -660,7 +658,7 @@ def test_pair_stage_invariant_catches_unbounded_theta_join(spark, sf_dir):
         a.join(opaque, F.col("vec_a") < F.col("vec_b"))
     )
     # ... unless the engine registered it as bounded
-    registered = bounded_checkpoint(b.orderBy("vec_b").limit(16))
+    registered = barrier(b.orderBy("vec_b").limit(16), bounded=True)
     assert not _pair_stage_offenders(
         a.join(registered, F.col("vec_a") < F.col("vec_b"))
     )
@@ -805,7 +803,7 @@ def test_broadcast_invariant_flags_vocab_grain_hint(spark, sf_dir):
 
 
 def test_pagerank_copartition_mode_has_no_state_broadcast(spark, sf_dir):
-    """Above BROADCAST_STATE_MAX_NODES the per-round rank state must NOT be
+    """Above BROADCAST_STATE_MAX_ROWS the per-round rank state must NOT be
     broadcast (SF1000: ~200M rows/round); the edge side stays partitioned
     on src and only node-sized state moves. The per-round plans live behind
     localCheckpoint barriers, so capture them at checkpoint time."""
@@ -814,9 +812,10 @@ def test_pagerank_copartition_mode_has_no_state_broadcast(spark, sf_dir):
     except ImportError:
         from pyspark.sql import DataFrame
 
+    import dbt_tpch_spark.functions as fx
     import dbt_tpch_spark.operators.graph as g
 
-    saved = g.BROADCAST_STATE_MAX_NODES
+    saved = fx.BROADCAST_STATE_MAX_ROWS
     real_ckpt = DataFrame.localCheckpoint
     captured = []
 
@@ -824,13 +823,13 @@ def test_pagerank_copartition_mode_has_no_state_broadcast(spark, sf_dir):
         captured.append(self._jdf.queryExecution().executedPlan().toString())
         return real_ckpt(self, eager=eager)
 
-    g.BROADCAST_STATE_MAX_NODES = 0
+    fx.BROADCAST_STATE_MAX_ROWS = 0
     DataFrame.localCheckpoint = spy
     try:
         df = Context(spark, sf_dir).ref("parts_pagerank")
     finally:
         DataFrame.localCheckpoint = real_ckpt
-        g.BROADCAST_STATE_MAX_NODES = saved
+        fx.BROADCAST_STATE_MAX_ROWS = saved
     # pr-init + one per iteration (edges are cached, not checkpointed)
     assert len(captured) >= 1 + g.ITERS
     import re
@@ -860,20 +859,20 @@ def test_graph_state_modes_produce_identical_output(spark, sf_dir):
     be VALUE-identical — both paths quantize ranks/core numbers the same
     way, so the full output tables must match row for row, not just both
     come back green."""
-    import dbt_tpch_spark.operators.graph as g
+    import dbt_tpch_spark.functions as fx
 
     for name, key in (("parts_pagerank", "part_key"), ("parts_kcore", "part_key")):
         cols = None
         outputs = []
-        saved = g.BROADCAST_STATE_MAX_NODES
+        saved = fx.BROADCAST_STATE_MAX_ROWS
         for forced in (saved, 0):
-            g.BROADCAST_STATE_MAX_NODES = forced
+            fx.BROADCAST_STATE_MAX_ROWS = forced
             try:
                 df = Context(spark, sf_dir).ref(name)
                 cols = df.columns
                 outputs.append(sorted(map(tuple, df.collect())))
             finally:
-                g.BROADCAST_STATE_MAX_NODES = saved
+                fx.BROADCAST_STATE_MAX_ROWS = saved
         assert outputs[0], f"{name}: empty output cannot witness equality"
         assert outputs[0] == outputs[1], (
             f"{name}: broadcast-state vs shuffle-hash-state outputs differ "
